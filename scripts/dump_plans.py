@@ -76,12 +76,10 @@ def main() -> int:
     ]
     for name, why in picks:
         if name == "kg_context_build":
-            # build_context (materialize=True) is STAGED: dimension-sized
-            # intermediates are driver-collected and fed back as literal
-            # predicates, so there is no single monolithic plan (the lazy
-            # materialize=False twin exists for composition, but its
-            # 380+-node tree is not useful review material). The evidence
-            # is the two corpus-touching sub-queries: both bounded scans.
+            # build_context is STAGED: dimension-sized intermediates are
+            # driver-collected and fed back as literal predicates, so there
+            # is no single monolithic plan. The evidence is the two
+            # corpus-touching sub-queries: both bounded scans.
             from pyspark.sql import functions as F
 
             from vanna_financial_knowledge_graph_spark.functions.embedding import (

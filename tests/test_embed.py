@@ -250,32 +250,6 @@ def test_context_neighbor_chunks_bidirectional(spark):
     assert "c5" not in by_chunk
 
 
-def test_context_modes_agree(spark, kg):
-    """The staged driver-assisted path (materialize=True) and the single
-    lazy plan (materialize=False) must produce identical context rows."""
-    from vanna_financial_knowledge_graph_spark.operators.context import build_context
-
-    kwargs = dict(
-        entity_name="Apple Inc.",
-        query_text="earnings in the technology sector",
-        caps={"high": 7, "low": 5, "topic": 4, "global": 3},
-    )
-    handles = []
-    eager = build_context(
-        spark, kg["entities"], kg["relationships"], kg["chunks"],
-        kg["vectors"], materialize=True, **kwargs,
-    ).collect()
-    lazy = build_context(
-        spark, kg["entities"], kg["relationships"], kg["chunks"],
-        kg["vectors"], materialize=False, caches=handles, **kwargs,
-    ).collect()
-    for h in handles:
-        h.unpersist()
-    key = lambda r: (r["chunk_uuid"], r["source"], r["relevance"], round(r["score"], 4))
-    assert sorted(map(key, eager)) == sorted(map(key, lazy))
-    assert eager, "context must be non-empty"
-
-
 def test_context_unknown_entity_empty(spark, kg):
     from vanna_financial_knowledge_graph_spark.operators.context import build_context
 
@@ -288,7 +262,7 @@ def test_context_unknown_entity_empty(spark, kg):
 
 
 def test_context_materialized_releases_all_caches(spark, kg):
-    """materialize=True must leave ZERO lingering cached RDDs: a long-lived
+    """build_context must leave ZERO lingering cached RDDs: a long-lived
     session answering many questions must not grow executor storage
     (round-3 regression guard, kept across the round-4 restage)."""
     from vanna_financial_knowledge_graph_spark.operators.context import build_context
@@ -306,23 +280,40 @@ def test_context_materialized_releases_all_caches(spark, kg):
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_context_lazy_mode_returns_cache_handles(spark, kg):
-    """materialize=False with caches=[] hands the internal cached branches
-    to the caller so composed usage can release them (ADVICE r3)."""
+def test_build_context_never_writes_session_conf(spark, kg):
+    """build_context must not write session configuration: a query running
+    concurrently on the same session sees the caller's AQE setting for the
+    whole call, never a value the context build set for itself."""
+    import threading
+
     from vanna_financial_knowledge_graph_spark.operators.context import build_context
 
-    handles = []
-    ctx = build_context(
-        spark, kg["entities"], kg["relationships"], kg["chunks"],
-        kg["vectors"], "Apple Inc.", "earnings",
-        materialize=False, caches=handles,
-    )
-    assert ctx.count() > 0
-    assert len(handles) == 3
-    for h in handles:
-        assert h.is_cached
-        h.unpersist()
-    assert not any(h.is_cached for h in handles)
+    key = "spark.sql.adaptive.enabled"
+    caller = spark.conf.get(key)
+    seen = []
+    polling = threading.Event()
+    done = threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.append(spark.conf.get(key))
+            polling.set()
+            done.wait(0.01)
+
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
+    assert polling.wait(timeout=60)
+    try:
+        rows = build_context(
+            spark, kg["entities"], kg["relationships"], kg["chunks"],
+            kg["vectors"], "Apple Inc.", "earnings",
+        ).collect()
+    finally:
+        done.set()
+        poller.join(timeout=60)
+    assert not poller.is_alive()
+    assert rows
+    assert set(seen) == {caller}, f"poller saw {sorted(set(seen))}, caller set {caller}"
 
 
 def test_recrawl_upsert_equals_from_scratch(spark, kg):
@@ -502,55 +493,19 @@ def test_ontology_topic_search(spark, kg):
     assert len({r["uuid"] for r in got}) == 5
 
 
-def test_cap_tiers_null_scores_agree(spark):
-    """NULL relevance scores (zero-norm embedding / zero query vector) must
-    land in the LOW tier in BOTH context modes (ADVICE r4: the staged
-    path's score<t filter silently dropped them while the lazy path kept
-    them as 'low')."""
-    from vanna_financial_knowledge_graph_spark.operators.context import (
-        _cap_tiers,
-        _cap_tiers_takeordered,
-    )
-
-    scored = spark.createDataFrame(
-        [
-            ("c1", "entity", 0.9),
-            ("c2", "global", 0.05),
-            ("c3", "entity", None),
-            ("c3", "neighbor", None),
-            ("c4", "neighbor", 0.4),
-        ],
-        "chunk_uuid string, source string, score double",
-    )
-    topic_scored = spark.createDataFrame(
-        [("c5", "topic", None), ("c6", "topic", 0.3)],
-        "chunk_uuid string, source string, score double",
-    )
-    caps = {"high": 30, "low": 20, "topic": 15}
-    lazy = _cap_tiers(scored, topic_scored, caps, 0.2)
-    staged = _cap_tiers_takeordered(scored, topic_scored, caps, 0.2)
-    key = lambda rows: sorted(
-        (r["chunk_uuid"], r["source"], r["relevance"], r["score"]) for r in rows
-    )
-    assert key(lazy.collect()) == key(staged.collect())
-    rel = {r["chunk_uuid"]: r["relevance"] for r in staged.collect()}
-    assert rel["c3"] == "low" and rel["c5"] == "topic"
-
-
-def test_context_child_session_mode_agrees(spark, kg, monkeypatch):
-    """Opt-in AQE isolation (VKG_CTX_CHILD_SESSION=1): the staged build runs
-    on an AQE-off child session with rebound inputs; rows must equal the
-    default locked-toggle path and the primary session's AQE conf must be
-    untouched throughout."""
+def test_context_null_scores_land_in_low_tier(spark, kg):
+    """An empty query embeds to the zero vector, so every cosine score is
+    NULL: each non-topic row must land in the LOW tier (relevance_split's
+    `otherwise` branch), never be dropped, and topic rows must still be
+    admitted."""
     from vanna_financial_knowledge_graph_spark.operators.context import build_context
 
-    args = (
+    rows = build_context(
         spark, kg["entities"], kg["relationships"], kg["chunks"],
-        kg["vectors"], "Apple Inc.", "earnings and acquisitions",
-    )
-    key = lambda rows: sorted(map(tuple, rows))
-    default_rows = key(build_context(*args).collect())
-    monkeypatch.setenv("VKG_CTX_CHILD_SESSION", "1")
-    child_rows = key(build_context(*args).collect())
-    assert child_rows == default_rows and child_rows
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        kg["vectors"], "Apple Inc.", "",
+    ).collect()
+    assert rows, "NULL scores must not empty the context"
+    non_topic = [r for r in rows if r["relevance"] != "topic"]
+    assert non_topic
+    assert all(r["relevance"] == "low" and r["score"] is None for r in non_topic)
+    assert any(r["relevance"] == "topic" for r in rows)

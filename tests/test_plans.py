@@ -228,18 +228,19 @@ def test_context_build_no_cartesian_no_smj_on_chunks(spark, kg):
         build_context,
     )
 
-    # materialize=False exposes the full lazy composition for inspection
-    # (the default eagerly checkpoints the tiny selection and releases the
-    # internal caches, which hides the upstream joins from the final plan)
+    # the returned frame is the content join: the staged selection (a local
+    # relation of <= high+low+topic rows) against the chunks scan, whose
+    # selected ids are pushed into the parquet reader as a literal IN-filter
     p = _plan(
         build_context(
             spark, kg["entities"], kg["relationships"], kg["chunks"],
-            kg["vectors"], "Apple Inc.", "earnings", materialize=False,
+            kg["vectors"], "Apple Inc.", "earnings",
         )
     )
     assert "CartesianProduct" not in p
-    # every seed/neighbor/topic driver is dimension-sized and broadcast
-    assert p.count("BroadcastExchange") >= 3
+    assert "SortMergeJoin" not in p
+    scans = [ln for ln in p.splitlines() if "FileScan" in ln and "chunk_uuid" in ln]
+    assert scans and all("In(chunk_uuid, [" in ln for ln in scans), scans
 
 
 def test_vectors_kind_filter_pushed_to_scan(spark, kg):

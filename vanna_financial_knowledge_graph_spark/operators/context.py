@@ -7,82 +7,34 @@ are their own category in StructuredContext, not part of the high/low
 split), returned as ONE composed DataFrame — the query a reference user
 actually runs per question.
 
-Two execution modes, identical rows (pinned by
-tests/test_embed.py::test_context_modes_agree):
-
-* materialize=True (default, the production read path): STAGED driver-
-  assisted execution. Every intermediate that is dimension-sized by
-  construction — the seed entity uuid, the top-k neighbor uuids, the seed's
-  topic uuids, and the final <= high+low+topic capped selection — is
-  collected to the driver and fed back as literal predicates. The candidate
-  chunk set is NOT treated as dimension-sized (a hot entity's 1-hop
-  neighborhood is corpus-scale — ~212k of 216k chunks at sf1.0), so it
-  never touches the driver: one map-side-partial groupBy dedups the source
-  tags and joins a skinny cached (chunk_uuid, score) projection.
-  Consequence at any scale: the edge table is scanned exactly TWICE (seed
-  pass, neighbor+topic pass), both with pushable from/to-uuid IN-filters;
-  the chunk-vector table exactly ONCE (the cached score projection, fully
-  populated by the concurrent global top-k — a TakeOrderedAndProject over
-  the codegen'd literal cosine); 4 driver jobs / 3 sequential rounds,
-  zero lingering caches. This mirrors the reference's own sequential query
-  plan (researcher.py fetches neighbors, then their chunks) — the
-  collected values are a handful of uuids, never corpus-sized data.
-* materialize=False: ONE fully lazy composed plan (for composition or plan
-  inspection); internal cached branches stay alive and the CALLER owns
-  their lifetime — pass caches=[] to receive them for unpersist.
+Execution is STAGED and driver-assisted. Every intermediate that is
+dimension-sized by construction — the seed entity uuid, the top-k neighbor
+uuids, the seed's topic uuids, and the final <= high+low+topic capped
+selection — is collected to the driver and fed back as literal predicates.
+The candidate chunk set is NOT treated as dimension-sized (a hot entity's
+1-hop neighborhood is corpus-scale — ~212k of 216k chunks at sf1.0), so it
+never touches the driver: one map-side-partial groupBy dedups the source
+tags and joins a skinny cached (chunk_uuid, score) projection.
+Consequence at any scale: the edge table is scanned exactly TWICE (seed
+pass, neighbor+topic pass), both with pushable from/to-uuid IN-filters; the
+chunk-vector table exactly ONCE (the cached score projection, fully
+populated by the concurrent global top-k — a TakeOrderedAndProject over the
+codegen'd literal cosine); the content scan once, with the selected chunk
+ids pushed in as a literal IN-filter. No cache outlives the call, and the
+call never writes session configuration. This mirrors the reference's own
+sequential query plan (researcher.py fetches neighbors, then their chunks)
+— the collected values are a handful of uuids, never corpus-sized data.
 """
 
 from __future__ import annotations
 
-import os
-import threading
-import weakref
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.embedding import EMBED_DIM, embed_text
 from .dedup import cosine_literal_expr
-from .readpath import context_caps, dedup_max_score, relevance_split
-
-_AQE_LOCK = threading.Lock()
-
-# one AQE-off child session per primary session (keyed weakly so a torn-down
-# session doesn't pin its child); newSession shares SparkContext + cached
-# blocks but owns its SQLConf, so setting adaptive=false there is invisible
-# to every other query. False = probe failed once, don't retry per call.
-_CHILD_SESSIONS = weakref.WeakKeyDictionary()
-_CHILD_LOCK = threading.Lock()
-
-
-def _aqe_off_child_session(spark: SparkSession) -> SparkSession | None:
-    """The cached AQE-off child of `spark`, or None when plan rebinding
-    isn't available in this Spark build (then callers fall back to a locked
-    conf toggle on the primary session). The probe runs ONCE per session —
-    success and failure are both cached, so a build without
-    Dataset.ofRows doesn't pay a discarded newSession per call."""
-    with _CHILD_LOCK:
-        child = _CHILD_SESSIONS.get(spark)
-        if child is None:
-            try:
-                child = spark.newSession()
-                child.conf.set("spark.sql.adaptive.enabled", "false")
-                # probe: Dataset.ofRows must exist for _rebind to work
-                _rebind(spark.range(1), child)
-            except Exception:  # noqa: BLE001 — conservative fallback
-                child = False
-            _CHILD_SESSIONS[spark] = child
-        return child or None
-
-
-def _rebind(df: DataFrame, session: SparkSession) -> DataFrame:
-    """Re-wrap a DataFrame's logical plan under another session of the same
-    SparkContext (classic-mode Dataset.ofRows), so it plans/executes with
-    that session's SQLConf."""
-    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        session._jsparkSession, df._jdf.logicalPlan()
-    )
-    return DataFrame(jdf, session)
 
 # reference ContextBuilder defaults (context_builder.py:36-41): high/low are
 # RELEVANCE-tier caps applied after the cross-source dedup; topic is its own
@@ -106,16 +58,14 @@ def build_context(
     caps: dict[str, int] | None = None,
     relevance_threshold: float = 0.2,
     group_id: str = "default",
-    materialize: bool = True,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """-> (chunk_uuid, source, relevance, score, content) context rows.
 
     relevance is 'high'/'low' for entity/neighbor/global-sourced chunks
     (tier caps caps['high']/caps['low']) and 'topic' for topic-sourced
     chunks (their own dedup + caps['topic'], matching the reference's
-    separate topic_chunks category). See module docstring for the two
-    execution modes."""
+    separate topic_chunks category). See the module docstring for how the
+    selection executes."""
     caps = caps or DEFAULT_CAPS
     unknown = set(caps) - set(DEFAULT_CAPS)
     if unknown:
@@ -124,63 +74,19 @@ def build_context(
             f"a subset of {sorted(DEFAULT_CAPS)} (per-source caps were "
             "replaced by reference relevance-TIER caps in round 3)"
         )
-    args = (
-        spark, entities, relationships, chunks, vectors, entity_name,
+    final = _staged_selection(
+        spark, entities, relationships, vectors, entity_name,
         query_text, k_neighbors, caps, relevance_threshold, group_id,
     )
-    if materialize:
-        # AQE pays off on big shuffles; on this interactive query — a chain
-        # of dimension-sized stages — its per-stage re-planning adds a
-        # scheduling round per mini-stage (measured ~2-3x wall on the
-        # composed selection), so the staged call runs with AQE off.
-        #
-        # Two isolation mechanisms for that toggle:
-        # * default: a LOCKED set/restore on the primary session. Concurrent
-        #   queries on the same session during a build see AQE off for its
-        #   duration (ADVICE r4) — harmless for this engine's drivers,
-        #   which run read-path queries sequentially per session.
-        # * VKG_CTX_CHILD_SESSION=1: run the whole staged selection on a
-        #   cached AQE-off CHILD session (spark.newSession(): own SQLConf,
-        #   shared SparkContext/cache; inputs rebound via Dataset.ofRows),
-        #   so the toggle cannot bleed into ANY concurrent query. Opt-in
-        #   because it measured ~1-3 s slower per call at sf0.1 (the
-        #   rebind itself is ~8 ms; the residual is child-session execution
-        #   overhead) — the right trade only for deployments that actually
-        #   multiplex concurrent queries on one session.
-        child = (
-            _aqe_off_child_session(spark)
-            if os.environ.get("VKG_CTX_CHILD_SESSION", "0") == "1"
-            else None
-        )
-        if child is not None:
-            final = _staged_selection(
-                child,
-                *(_rebind(df, child) for df in (entities, relationships, chunks, vectors)),
-                entity_name, query_text, k_neighbors, caps,
-                relevance_threshold, group_id,
-            )
-            final = _rebind(final, spark)
-        else:
-            with _AQE_LOCK:
-                prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                try:
-                    final = _staged_selection(*args)
-                finally:
-                    spark.conf.set("spark.sql.adaptive.enabled", prev)
-    else:
-        final = _lazy_selection(*args, caches)
+    # the staged selection is already a local relation of <= 65 rows: push
+    # its chunk ids into the content scan as a literal IN-filter (round-6)
+    # — the vectorized parquet reader then reads the heavy content column
+    # only for matching rows (measured ~2x on the enrichment join; a no-op
+    # logically, the inner join keeps exactly these ids anyway)
     chunks_side = chunks.where(F.col("group_id") == group_id)
-    if materialize:
-        # the staged selection is already a local relation of <= 65 rows:
-        # push its chunk ids into the content scan as a literal IN-filter
-        # (round-6) — the vectorized parquet reader then materializes the
-        # heavy content column only for matching rows (measured ~2x on the
-        # enrichment join; a no-op logically, the inner join keeps exactly
-        # these ids anyway)
-        sel_ids = [r["chunk_uuid"] for r in final.select("chunk_uuid").collect()]
-        if sel_ids:
-            chunks_side = chunks_side.where(F.col("chunk_uuid").isin(sel_ids))
+    sel_ids = [r["chunk_uuid"] for r in final.select("chunk_uuid").collect()]
+    if sel_ids:
+        chunks_side = chunks_side.where(F.col("chunk_uuid").isin(sel_ids))
     return (
         final.join(
             chunks_side.select("chunk_uuid", "content"),
@@ -197,40 +103,10 @@ def build_context(
     )
 
 
-def _cap_tiers(
-    scored: DataFrame,
-    topic_scored: DataFrame,
-    caps: dict[str, int],
-    relevance_threshold: float,
-) -> DataFrame:
-    """Shared tail of both modes: A8 dedup -> W6 split -> W5 tier caps for
-    the non-topic sources; separate dedup+cap for the topic category; a
-    chunk admitted via high/low wins over its topic copy (documented
-    divergence from the reference, which lists topic_chunks separately and
-    CAN repeat a chunk_id across categories — see COVERAGE.md)."""
-    deduped = dedup_max_score(scored, "chunk_uuid", "score")
-    split = relevance_split(deduped, "score", threshold=relevance_threshold)
-    capped = context_caps(
-        split, "relevance", "score",
-        {"high": caps.get("high", 30), "low": caps.get("low", 20)},
-    )
-    topic_capped = (
-        dedup_max_score(topic_scored, "chunk_uuid", "score")
-        .orderBy(F.desc("score"), "chunk_uuid")
-        .limit(caps.get("topic", 15))
-        .withColumn("relevance", F.lit("topic"))
-    )
-    topic_only = topic_capped.join(
-        capped.select("chunk_uuid"), "chunk_uuid", "left_anti"
-    )
-    return capped.unionByName(topic_only)
-
-
 def _staged_selection(
     spark: SparkSession,
     entities: DataFrame,
     relationships: DataFrame,
-    chunks: DataFrame,
     vectors: DataFrame,
     entity_name: str,
     query_text: str,
@@ -239,8 +115,8 @@ def _staged_selection(
     relevance_threshold: float,
     group_id: str,
 ) -> DataFrame:
-    """materialize=True: staged execution, dimension-sized driver collects,
-    literal-predicate scans, returns the tiny selection as a local frame."""
+    """Staged execution: dimension-sized driver collects, literal-predicate
+    scans; returns the tiny selection as a local frame."""
     qv = embed_text(query_text, EMBED_DIM)
     euuids = [
         r["uuid"]
@@ -257,8 +133,8 @@ def _staged_selection(
 
     # edge-table scan 1 of 2: every edge touching the seed, from either
     # endpoint (J2); the isin predicate pushes to the scan. dir/euuid via
-    # explode reproduce the lazy union's row multiplicity exactly (an edge
-    # between two same-name seeds yields one row per matching endpoint).
+    # explode give one row per matching endpoint (an edge between two
+    # same-name seeds yields two rows, one per seed).
     dirs = F.array_compact(
         F.array(
             F.when(F.col("from_uuid").isin(euuids), F.lit("from")),
@@ -285,7 +161,7 @@ def _staged_selection(
     )
     # top-k neighbors by connection count (A2/W3) and the seed's topic
     # uuids in ONE tagged driver collect (k + |topics| rows) — this is also
-    # the job that materializes the seed_edges cache
+    # the job that fills the seed_edges cache
     neigh_df = (
         seed_edges.where(
             (F.col("dir") == "from")
@@ -334,8 +210,6 @@ def _staged_selection(
         .limit(caps.get("global", 10))
         .select("chunk_uuid")
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=2) as pool:
         tagged_f = pool.submit(neigh_df.unionByName(topic_df).collect)
         gids_f = pool.submit(global_topk.collect)
@@ -349,7 +223,7 @@ def _staged_selection(
     # and no cache here (round-6): the per-chunk groupBy below subsumes the
     # dedup, and map-side partial aggregation collapses the tag rows before
     # the one exchange — the old distinct+cache+broadcast(hit_ids) chain
-    # materialized the candidate set three times, which at sf1.0 is ~212k
+    # computed the candidate set three times, which at sf1.0 is ~212k
     # chunks (a hot entity's 1-hop neighborhood is corpus-scale, NOT
     # dimension-sized), costing ~4s of the interactive path.
     is_neighbor = F.col("from_uuid").isin(nuuids) | F.col("to_uuid").isin(nuuids)
@@ -370,11 +244,11 @@ def _staged_selection(
 
     # ONE aggregation replaces the old (distinct -> join -> groupBy-max)
     # chain: the cosine score is a FUNCTION of chunk_uuid (one vector row
-    # per chunk), so the cross-source dedup winner — max struct(score, sr,
-    # source) in _cap_tiers_takeordered — reduces to max struct(sr, source):
-    # the score field is constant within a chunk's group and never breaks a
-    # tie. Topic membership rides along as a flag instead of a second
-    # deduped branch.
+    # per chunk), so the A8 cross-source dedup winner (max score, then
+    # entity > global > neighbor) reduces to max struct(sr, source): the
+    # score is constant within a chunk's group and never breaks a tie.
+    # Topic membership rides along as a flag instead of a second deduped
+    # branch.
     src_rank = (
         F.when(F.col("source") == "entity", 3)
         .when(F.col("source") == "global", 2)
@@ -408,8 +282,10 @@ def _staged_selection(
         .limit(caps.get("high", 30))
     )
     low = (
-        # NULL scores land in the LOW tier, exactly like relevance_split's
-        # `otherwise` branch in the lazy path (ADVICE r4)
+        # NULL scores (zero-norm chunk embedding or zero query vector —
+        # cosine returns null, never DIVIDE_BY_ZERO) land in the LOW tier,
+        # exactly like relevance_split's `otherwise` branch; desc ordering
+        # puts them last within the tier
         main.where(
             (F.col("score") < relevance_threshold) | F.col("score").isNull()
         )
@@ -429,195 +305,11 @@ def _staged_selection(
         F.broadcast(capped.select("chunk_uuid")), "chunk_uuid", "left_anti"
     )
     final = capped.unionByName(topic_only)
-    # the selection is <= high+low+topic rows: land it driver-side (ONE
-    # job), then release every cache — a long-lived session answers many
+    # the selection is <= high+low+topic rows: land it driver-side in one
+    # collect, then release every cache — a long-lived session answers many
     # questions and must not accumulate executor storage
     rows = final.collect()
     schema = final.schema
     for c in (seed_edges, scored, joined):
         c.unpersist()
     return spark.createDataFrame(rows, schema)
-
-
-def _cap_tiers_takeordered(
-    scored: DataFrame,
-    topic_scored: DataFrame,
-    caps: dict[str, int],
-    relevance_threshold: float,
-) -> DataFrame:
-    """Windowless twin of _cap_tiers for the staged path: the A8 dedup is a
-    struct-max groupBy (winner = max score, alphabetically-first source on
-    ties — exactly the window's desc(score) + asc-columns order) and each
-    tier cap is an orderBy().limit(), i.e. a TakeOrderedAndProject, not a
-    row_number window — no per-tier window exchange, same rows
-    (tests/test_embed.py::test_context_modes_agree)."""
-    src_rank = (
-        F.when(F.col("source") == "entity", 3)
-        .when(F.col("source") == "global", 2)
-        .otherwise(1)
-    )
-    dedup = (
-        scored.groupBy("chunk_uuid")
-        .agg(
-            F.max(
-                F.struct(F.col("score"), src_rank.alias("sr"), F.col("source"))
-            ).alias("m")
-        )
-        .select(
-            "chunk_uuid",
-            F.col("m.source").alias("source"),
-            F.col("m.score").alias("score"),
-        )
-    )
-    high = (
-        dedup.where(F.col("score") >= relevance_threshold)
-        .withColumn("relevance", F.lit("high"))
-        .orderBy(F.desc("score"), "chunk_uuid")
-        .limit(caps.get("high", 30))
-    )
-    low = (
-        # NULL scores (zero-norm chunk embedding or zero query vector —
-        # cosine returns null, never DIVIDE_BY_ZERO) land in the LOW tier,
-        # exactly like relevance_split's `otherwise` branch in the lazy
-        # path (ADVICE r4: the two modes must not diverge on nulls); desc
-        # ordering puts them last within the tier on both engines
-        dedup.where(
-            (F.col("score") < relevance_threshold) | F.col("score").isNull()
-        )
-        .withColumn("relevance", F.lit("low"))
-        .orderBy(F.desc("score"), "chunk_uuid")
-        .limit(caps.get("low", 20))
-    )
-    capped = high.unionByName(low)
-    topic_capped = (
-        topic_scored.groupBy("chunk_uuid")
-        .agg(F.max("score").alias("score"))
-        .select("chunk_uuid", F.lit("topic").alias("source"), "score")
-        .orderBy(F.desc("score"), "chunk_uuid")
-        .limit(caps.get("topic", 15))
-        .withColumn("relevance", F.lit("topic"))
-    )
-    topic_only = topic_capped.join(
-        F.broadcast(capped.select("chunk_uuid")), "chunk_uuid", "left_anti"
-    )
-    return capped.unionByName(topic_only)
-
-
-def _lazy_selection(
-    spark: SparkSession,
-    entities: DataFrame,
-    relationships: DataFrame,
-    chunks: DataFrame,
-    vectors: DataFrame,
-    entity_name: str,
-    query_text: str,
-    k_neighbors: int,
-    caps: dict[str, int],
-    relevance_threshold: float,
-    group_id: str,
-    caches: list[DataFrame] | None,
-) -> DataFrame:
-    """materialize=False: one composed lazy plan; cached branches are handed
-    to the caller via `caches` (they own the lifetime)."""
-    qv = embed_text(query_text, EMBED_DIM)
-    seed = entities.where(
-        (F.lower(F.col("name")) == entity_name.lower())
-        & (F.col("group_id") == group_id)
-    ).select(F.col("uuid").alias("euuid"))
-    r = relationships.where(F.col("group_id") == group_id)
-
-    e_from = r.join(F.broadcast(seed), r["from_uuid"] == F.col("euuid")).withColumn(
-        "dir", F.lit("from")
-    )
-    e_to = r.join(F.broadcast(seed), r["to_uuid"] == F.col("euuid")).withColumn(
-        "dir", F.lit("to")
-    )
-    seed_edges = (
-        e_from.unionByName(e_to)
-        .select("from_uuid", "to_uuid", "to_type", "chunk_uuid", "euuid", "dir")
-        .cache()
-    )
-    internal_caches = [seed_edges]
-
-    src_entity = (
-        seed_edges.select("chunk_uuid").distinct().withColumn("source", F.lit("entity"))
-    )
-    neighbors = (
-        seed_edges.where(
-            (F.col("dir") == "from")
-            & (F.col("to_type") == "entity")
-            & (F.col("to_uuid") != F.col("euuid"))
-        )
-        .select(F.col("to_uuid").alias("nuuid"))
-        .union(
-            seed_edges.where(
-                (F.col("dir") == "to") & (F.col("from_uuid") != F.col("euuid"))
-            ).select(F.col("from_uuid").alias("nuuid"))
-        )
-        .groupBy("nuuid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "nuuid")
-        .limit(k_neighbors)
-        .select("nuuid")
-    )
-    # neighbor chunks from edges where the neighbor is EITHER endpoint
-    # (researcher.py:732-769 -> queries.py:460-502)
-    src_neighbor = (
-        r.join(F.broadcast(neighbors), r["from_uuid"] == F.col("nuuid"))
-        .select("chunk_uuid")
-        .union(
-            r.join(F.broadcast(neighbors), r["to_uuid"] == F.col("nuuid")).select(
-                "chunk_uuid"
-            )
-        )
-        .distinct()
-        .withColumn("source", F.lit("neighbor"))
-    )
-    seed_topics = (
-        seed_edges.where((F.col("dir") == "from") & (F.col("to_type") == "topic"))
-        .select(F.col("to_uuid").alias("tuuid"))
-        .distinct()
-    )
-    src_topic = (
-        r.where(F.col("to_type") == "topic")
-        .join(F.broadcast(seed_topics), r["to_uuid"] == F.col("tuuid"))
-        .select("chunk_uuid")
-        .distinct()
-        .withColumn("source", F.lit("topic"))
-    )
-
-    chunk_vecs = vectors.where(
-        (F.col("kind") == "chunk") & (F.col("group_id") == group_id)
-    ).select(F.col("uuid").alias("chunk_uuid"), "embedding")
-    src_global = (
-        chunk_vecs.withColumn("score", cosine_literal_expr("embedding", qv))
-        .orderBy(F.desc("score"), "chunk_uuid")
-        .limit(caps.get("global", 10))
-        .select("chunk_uuid")
-        .withColumn("source", F.lit("global"))
-        .cache()
-    )
-    internal_caches.append(src_global)
-
-    all_src = src_entity.unionByName(src_neighbor).unionByName(src_global)
-    hit_ids = (
-        all_src.select("chunk_uuid").union(src_topic.select("chunk_uuid")).distinct()
-    )
-    scored_hits = (
-        chunk_vecs.join(F.broadcast(hit_ids), "chunk_uuid")
-        .withColumn("score", cosine_literal_expr("embedding", qv))
-        .select("chunk_uuid", "score")
-        .cache()
-    )
-    internal_caches.append(scored_hits)
-
-    final = _cap_tiers(
-        all_src.join(scored_hits, "chunk_uuid"),
-        src_topic.join(scored_hits, "chunk_uuid"),
-        caps,
-        relevance_threshold,
-    )
-    if caches is not None:
-        caches.extend(internal_caches)
-    return final
-
