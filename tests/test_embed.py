@@ -10,6 +10,8 @@ from vanna_financial_knowledge_graph_spark.functions.embedding import (
     embed_text,
 )
 
+from test_resume import tiny_sf  # noqa: F401  (the shared 30-doc slice)
+
 
 def test_embed_deterministic_and_normalized():
     a = embed_text("Apple acquired Stripe in Q3 2024")
@@ -316,43 +318,56 @@ def test_build_context_never_writes_session_conf(spark, kg):
     assert set(seen) == {caller}, f"poller saw {sorted(set(seen))}, caller set {caller}"
 
 
-def test_recrawl_upsert_equals_from_scratch(spark, kg):
-    """Incremental-crawl MERGE: recrawl 3 urls with changed html, merge into
-    the existing KG tables, and assert every table is row-equal to a
-    from-scratch build over the updated corpus (reference update semantics,
-    backend.py:499-553)."""
+def test_recrawl_upsert_equals_from_scratch(spark, tiny_sf, tmp_path):
+    """Incremental-crawl MERGE equals a from-scratch run_pipeline on every
+    graph table (reference update semantics, backend.py:499-553).
+
+    Base corpus: the 30-doc slice. Modified corpus: the same slice with 3
+    docs' text blanked (their synthesized html changes) plus 2 appended
+    docs. recrawl_upsert merges the modified run's pages for the changed
+    and new urls into the base run's per-document tables; all 10 graph
+    tables, vectors and the group_id='ontology' topics included, must be
+    multiset-equal to run_pipeline over the modified corpus."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from vanna_financial_knowledge_graph_spark.operators.upsert import (
-        build_kg_tables,
         recrawl_upsert,
     )
+    from vanna_financial_knowledge_graph_spark.plans.pipeline import run_pipeline
 
-    pages = kg["pages"]
-    urls = [r["url"] for r in pages.select("url").orderBy("url").limit(3).collect()]
-    modified = (
-        pages.where(F.col("url").isin(urls))
-        .withColumn(
-            "html",
-            F.encode(
-                F.regexp_replace(F.decode("html", "utf-8"), "acquired", "sold"),
-                "utf-8",
-            ),
-        )
-        .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
+    src = pq.read_table(f"{tiny_sf}/documents.parquet")
+    rows = src.to_pylist()
+    for i in (0, 10, 20):
+        rows[i]["text"] = ""
+    top = max(r["doc_id"] for r in rows)
+    rows += [{**rows[i], "doc_id": top + 1 + i} for i in (1, 2)]
+    mod_sf = tmp_path / "modified_sf"
+    mod_sf.mkdir()
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=src.schema),
+        str(mod_sf / "documents.parquet"),
     )
-    merged = recrawl_upsert(spark, kg, modified)
+    base = run_pipeline(spark, tiny_sf, str(tmp_path / "base_kg"))
+    scratch = run_pipeline(spark, str(mod_sf), str(tmp_path / "modified_kg"))
+
+    # the recrawl batch: modified-run pages whose html is new (3 changed +
+    # 2 appended urls)
+    batch = scratch["pages"].join(
+        base["pages"].select("url", "html"), ["url", "html"], "left_anti"
+    )
+    assert batch.count() == 5
+    doc_tables = ("docs", "chunks", "mentions", "facts_raw")
+    merged = recrawl_upsert(spark, {n: base[n] for n in doc_tables}, batch)
 
     # the recrawl must actually change the recrawled docs' chunks
     doc_uuids = [r["doc_uuid"] for r in merged["docs"].join(
-        modified.select("url"), "url").select("doc_uuid").collect()]
-    old_c = kg["chunks"].where(F.col("doc_uuid").isin(doc_uuids)).select(
+        batch.select("url"), "url").select("doc_uuid").collect()]
+    old_c = base["chunks"].where(F.col("doc_uuid").isin(doc_uuids)).select(
         "chunk_uuid", "content")
     new_c = merged["chunks"].where(F.col("doc_uuid").isin(doc_uuids)).select(
         "chunk_uuid", "content")
     assert new_c.exceptAll(old_c).count() > 0, "recrawl produced no change"
-
-    scratch = build_kg_tables(
-        spark, pages.where(~F.col("url").isin(urls)).unionByName(modified)
-    )
 
     def _multiset(df):
         return sorted(
@@ -360,11 +375,12 @@ def test_recrawl_upsert_equals_from_scratch(spark, kg):
         )
 
     for name in [
-        "docs", "chunks", "mentions", "facts_raw",
-        "canonical_map", "entities", "topics", "facts", "relationships",
+        "docs", "chunks", "mentions", "facts_raw", "canonical_map",
+        "entities", "topics", "facts", "relationships", "vectors",
     ]:
         a, b = merged[name], scratch[name].select(*merged[name].columns)
         assert _multiset(a) == _multiset(b), f"{name}: merged != from-scratch"
+    assert merged["topics"].where(F.col("group_id") == "ontology").count() > 0
 
 
 def test_merge_upsert(spark):
