@@ -9,7 +9,11 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
-from vanna_financial_knowledge_graph_spark.plans.pipeline import STAGES, PipelineRun
+from vanna_financial_knowledge_graph_spark.plans.pipeline import (
+    STAGE_TABLE,
+    STAGES,
+    PipelineRun,
+)
 
 
 @pytest.fixture(scope="module")
@@ -71,6 +75,13 @@ def test_manifest_lineage_contents(spark, tiny_sf, tmp_path):
     assert man["rows"] == sum(p["rows_out"] for p in man["partitions"])
     assert set(man["upstream"]) == {"facts_raw", "canonical_map"}
     assert all(v for v in man["upstream"].values())
+    # every stage's recorded lineage is exactly its declared inputs
+    declared = {"pages": (), **{s: inputs for s, (inputs, _) in STAGE_TABLE.items()}}
+    for stage in STAGES:
+        with open(f"{work}/{stage}/_MANIFEST.json") as f:
+            upstream = json.load(f)["upstream"]
+        assert list(upstream) == list(declared[stage]), stage
+        assert all(upstream.values()), stage
 
 
 def test_group_id_isolation(spark, tiny_sf, tmp_path):

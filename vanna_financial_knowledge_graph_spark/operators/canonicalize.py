@@ -28,9 +28,6 @@ every join against the resulting canonical map downstream is a broadcast.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,10 +48,12 @@ _TYPE_PRIORITY = {
 }
 
 
-def registry_surfaces_df(spark: SparkSession) -> DataFrame:
-    """(name_norm, canonical_name, canonical_norm, entity_type, definition)
-    for every registry surface (canonical + aliases + ticker)."""
-    dedup: dict[str, tuple] = {}
+def _registry_surfaces() -> dict[str, tuple[str, str, str, str]]:
+    """name_norm -> (canonical_name, canonical_norm, entity_type,
+    definition) for every registry surface (canonical + aliases + ticker).
+    One entry per normalized surface (case variants collapse);
+    deterministic winner = lexicographically smallest canonical_norm."""
+    out: dict[str, tuple[str, str, str, str]] = {}
     for r in registry_rows():
         cn = norm_name(r["canonical_name"])
         surfaces = {r["canonical_name"], *r["aliases"]}
@@ -62,12 +61,16 @@ def registry_surfaces_df(spark: SparkSession) -> DataFrame:
             surfaces.add(r["ticker"])
         for s in surfaces:
             sn = norm_name(s)
-            # one row per normalized surface (case variants collapse);
-            # deterministic winner = lexicographically smallest canonical
-            if sn and (sn not in dedup or dedup[sn][2] > cn):
-                dedup[sn] = (sn, r["canonical_name"], cn, r["entity_type"], r["definition"])
+            if sn and (sn not in out or out[sn][1] > cn):
+                out[sn] = (r["canonical_name"], cn, r["entity_type"], r["definition"])
+    return out
+
+
+def registry_surfaces_df(spark: SparkSession) -> DataFrame:
+    """_registry_surfaces() as a (name_norm, canonical_name, canonical_norm,
+    entity_type, definition) DataFrame."""
     return spark.createDataFrame(
-        sorted(dedup.values()),
+        sorted((sn, *v) for sn, v in _registry_surfaces().items()),
         "name_norm string, canonical_name string, canonical_norm string, "
         "entity_type string, definition string",
     )
@@ -354,19 +357,9 @@ def _canonical_map_driver(
     components) computed in plain Python — one Spark aggregation job in,
     one createDataFrame out. Equality with the distributed path is asserted
     by tests/test_canonicalize.py::test_canonical_paths_agree."""
-    from ..functions.textops import norm_name, stable_id, strip_corp_suffix
+    from ..functions.textops import stable_id, strip_corp_suffix
 
-    # registry surfaces: name_norm -> (canonical_name, canonical_norm, etype, definition)
-    reg: dict[str, tuple] = {}
-    for r in registry_rows():
-        cn = norm_name(r["canonical_name"])
-        surfaces = {r["canonical_name"], *r["aliases"]}
-        if r["ticker"]:
-            surfaces.add(r["ticker"])
-        for s in surfaces:
-            sn = norm_name(s)
-            if sn and (sn not in reg or reg[sn][1] > cn):
-                reg[sn] = (r["canonical_name"], cn, r["entity_type"], r["definition"])
+    reg = _registry_surfaces()
 
     # surface pick per name_norm: max by (cnt, name, entity_type)
     pick: dict[str, tuple] = {}
@@ -628,7 +621,3 @@ def union_find_components_py(
         r = find(x)
         comp_min[r] = min(comp_min.get(r, x), x)
     return {x: comp_min[find(x)] for x in parent}
-
-
-# silence linter for unused import kept for API symmetry
-_ = Iterator

@@ -48,7 +48,7 @@ def build_vectors(
     chunks: DataFrame,
     entities: DataFrame,
     facts: DataFrame,
-    topics: DataFrame | None = None,
+    topics: DataFrame,
     width: int | None = None,
 ) -> DataFrame:
     """Unified vector table (kind, uuid, text, embedding, group_id) — the
@@ -79,16 +79,13 @@ def build_vectors(
             F.col("content").alias("text"),
             "group_id",
         ),
+        topics.select(
+            F.lit("topic").alias("kind"),
+            F.col("uuid"),
+            F.concat_ws(": ", F.col("name"), F.col("definition")).alias("text"),
+            "group_id",
+        ),
     ]
-    if topics is not None:
-        parts.append(
-            topics.select(
-                F.lit("topic").alias("kind"),
-                F.col("uuid"),
-                F.concat_ws(": ", F.col("name"), F.col("definition")).alias("text"),
-                "group_id",
-            )
-        )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

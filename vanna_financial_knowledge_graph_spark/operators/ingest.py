@@ -16,9 +16,6 @@ and Arrow moves compact nested batches instead of a wide sparse union.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -137,36 +134,26 @@ def _pa_types():
 
 
 def build_annotations(
-    spark: SparkSession, source: DataFrame, group_id: str = GROUP_ID
+    spark: SparkSession, extracted: DataFrame, group_id: str = GROUP_ID
 ) -> DataFrame:
-    """mapInArrow: RecordBatches are built natively in pyarrow (C++ struct
+    """extracted (url, warc_ts, text) -> ANNOTATIONS.
+
+    mapInArrow: RecordBatches are built natively in pyarrow (C++ struct
     conversion), bypassing pyspark's per-cell Python converters for nested
     types — the dominant cost of the mapInPandas variant.
-
-    Accepts either the pages table (html column — extract_text runs inside
-    the kernel, one less text round-trip) or the extracted table (text
-    column). Identical output either way: same pure functions.
     """
     bc = spark.sparkContext.broadcast(gazetteer_entries())
-    use_html = "html" in source.columns
 
     def _run(batches):
         import datetime as _dt
 
         import pyarrow as pa
 
-        from ..functions.textops import extract_text
-
         schema = _pa_types()
         matcher = get_matcher(bc.value)
         for batch in batches:
             urls = batch.column("url").to_pylist()
-            if use_html:
-                texts = [
-                    extract_text(h) for h in batch.column("html").to_pylist()
-                ]
-            else:
-                texts = batch.column("text").to_pylist()
+            texts = batch.column("text").to_pylist()
             tss = batch.column("warc_ts").to_pylist()
             cols: dict[str, list] = {c: [] for c in _COLS}
             for url, text, ts in zip(urls, texts, tss):
@@ -200,8 +187,9 @@ def build_annotations(
                 schema=schema,
             )
 
-    src_cols = ["url", "warc_ts", "html"] if use_html else ["url", "warc_ts", "text"]
-    return source.select(*src_cols).mapInArrow(_run, schema=ANNOTATIONS)
+    return extracted.select("url", "warc_ts", "text").mapInArrow(
+        _run, schema=ANNOTATIONS
+    )
 
 
 def chunks_from_annotations(ann: DataFrame) -> DataFrame:

@@ -13,6 +13,15 @@ dimension-sized (the common incremental-crawl case: today's recrawled urls
 vs the full corpus), broadcast it so the 100TB target never moves; the
 left_anti below lets Catalyst/AQE pick that automatically once the update
 side is under the broadcast threshold.
+
+recrawl_upsert is the incremental crawl on top of merge_upsert. It composes
+the entries of the one stage table (plans/pipeline.py STAGE_TABLE) that
+run_pipeline materializes: the per-document stages over the recrawled
+pages, a per-doc_uuid merge, then the graph-global stages over the merged
+tables. tests/test_embed.py::test_recrawl_upsert_equals_from_scratch checks
+all 10 graph tables against run_pipeline over the updated corpus. Not
+job-free: canonical_map's size gate and the stages' width gates run Spark
+jobs at call time.
 """
 
 from __future__ import annotations
@@ -22,6 +31,12 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..plans.pipeline import STAGE_TABLE, StageContext, build_stage, default_width
+
+# the per-document tables recrawl_upsert replaces per doc_uuid, in stage
+# order; the last one closes the per-document prefix of STAGE_TABLE
+_DOC_TABLES = ["docs", "chunks", "mentions", "facts_raw"]
 
 
 def merge_upsert(
@@ -81,48 +96,6 @@ def upsert_parquet(
     return spark.read.parquet(path)
 
 
-def build_kg_tables(
-    spark: SparkSession, pages: DataFrame, group_id: str = "default"
-) -> dict[str, DataFrame]:
-    """All KG tables from a pages DataFrame — the stage functions of
-    plans/pipeline.py composed WITHOUT materialization. Everything is lazy:
-    callers that consume only the per-document tables never execute the
-    graph-global ones. Used by recrawl_upsert (per-doc tables of the K new
-    pages) and by tests as the from-scratch oracle."""
-    from .assemble import build_relationships, build_topics, link_facts
-    from .canonicalize import build_canonical_map, build_entities
-    from .extract import build_docs, extract_pages_text
-    from .ingest import (
-        build_annotations,
-        chunks_from_annotations,
-        facts_raw_from_annotations,
-        mentions_from_annotations,
-    )
-
-    extracted = extract_pages_text(pages)
-    ann = build_annotations(spark, extracted, group_id)
-    docs = build_docs(extracted, group_id)
-    chunks = chunks_from_annotations(ann)
-    mentions = mentions_from_annotations(ann)
-    facts_raw = facts_raw_from_annotations(ann)
-    canonical_map = build_canonical_map(spark, mentions, group_id)
-    entities = build_entities(spark, canonical_map, mentions, group_id)
-    topics = build_topics(spark, mentions, group_id)
-    facts = link_facts(spark, facts_raw, canonical_map, group_id)
-    relationships = build_relationships(facts, group_id)
-    return {
-        "docs": docs,
-        "chunks": chunks,
-        "mentions": mentions,
-        "facts_raw": facts_raw,
-        "canonical_map": canonical_map,
-        "entities": entities,
-        "topics": topics,
-        "facts": facts,
-        "relationships": relationships,
-    }
-
-
 def recrawl_upsert(
     spark: SparkSession,
     tables: dict[str, DataFrame],
@@ -131,49 +104,43 @@ def recrawl_upsert(
 ) -> dict[str, DataFrame]:
     """Incremental-crawl MERGE over the KG tables (the reference's real
     update path: re-ingesting a url updates its docs/chunks/facts in place,
-    backend.py:499-553).
+    backend.py:499-553). Reads only docs, chunks, mentions and facts_raw
+    from `tables`; returns the 10 graph tables.
 
     Semantics: per recrawled url, REPLACE — the per-document tables (docs,
     chunks, mentions, facts_raw) drop every row of the recrawled doc_uuids
     and take the freshly-extracted rows (a MERGE keyed on the url/doc id,
     `WHEN MATCHED DELETE + INSERT`, which plain upsert-by-row-uuid cannot
     express when the new crawl yields FEWER chunks). The graph-global
-    aggregates (canonical_map, entities, topics, facts, relationships) are
-    then rebuilt from the merged upstream — they are deterministic
-    reductions over distinct surface forms, so the result is ROW-EQUAL to a
-    from-scratch run over the updated corpus (asserted by
+    tables (canonical_map, entities, topics with the ontology namespace,
+    facts, relationships, vectors) are then rebuilt from the merged
+    upstream. Both halves are the entries of the one stage table
+    (plans/pipeline.py STAGE_TABLE) that run_pipeline materializes, and
+    every graph-global stage is a deterministic reduction, so the result is
+    ROW-EQUAL to run_pipeline over the updated corpus (asserted by
     tests/test_embed.py::test_recrawl_upsert_equals_from_scratch).
+
+    Not job-free: canonical_map's size gate count()s and collect()s the
+    merged surface stats, and the width gates of the annotations and
+    vectors stages call rdd.getNumPartitions(), which under AQE runs the
+    upstream shuffle stages of a lazy input. So this call runs Spark jobs,
+    extract + annotate of the new pages included, before it returns.
 
     Scale shape: the expensive per-row work (extract_text + annotation, the
     Python kernels) runs ONLY on the K recrawled pages; each merge is one
     shuffle keyed by doc_uuid with the (tiny) recrawl side broadcastable;
     the rebuilt aggregates operate on distinct surface forms, not the
     corpus."""
-    from .assemble import build_relationships, build_topics, link_facts
-    from .canonicalize import build_canonical_map, build_entities
-
-    fresh = build_kg_tables(spark, new_pages, group_id)
-    docs = merge_upsert(tables["docs"], fresh["docs"], ["doc_uuid"])
-    chunks = merge_upsert(tables["chunks"], fresh["chunks"], ["doc_uuid"])
-    mentions = merge_upsert(tables["mentions"], fresh["mentions"], ["doc_uuid"])
-    facts_raw = merge_upsert(tables["facts_raw"], fresh["facts_raw"], ["doc_uuid"])
-    # graph-global stages rebuilt from the merged upstream (deterministic)
-    canonical_map = build_canonical_map(spark, mentions, group_id)
-    entities = build_entities(spark, canonical_map, mentions, group_id)
-    topics = build_topics(spark, mentions, group_id)
-    facts = link_facts(spark, facts_raw, canonical_map, group_id)
-    relationships = build_relationships(facts, group_id)
-    return {
-        "docs": docs,
-        "chunks": chunks,
-        "mentions": mentions,
-        "facts_raw": facts_raw,
-        "canonical_map": canonical_map,
-        "entities": entities,
-        "topics": topics,
-        "facts": facts,
-        "relationships": relationships,
-    }
+    ctx = StageContext(spark, group_id, default_width(spark))
+    stages = list(STAGE_TABLE)
+    split = stages.index(_DOC_TABLES[-1]) + 1
+    fresh = {"pages": new_pages}
+    for name in stages[:split]:
+        fresh[name] = build_stage(ctx, name, fresh)
+    out = {n: merge_upsert(tables[n], fresh[n], ["doc_uuid"]) for n in _DOC_TABLES}
+    for name in stages[split:]:
+        out[name] = build_stage(ctx, name, out)
+    return out
 
 
 def update_entity_summaries(

@@ -1,5 +1,10 @@
 """Full KG-construction DAG with per-stage checkpoint-resume and lineage.
 
+The DAG is defined once, as STAGE_TABLE below (name -> declared inputs,
+stage function). PipelineRun.run() materializes it stage by stage;
+operators/upsert.py::recrawl_upsert composes the same entries without
+checkpoints.
+
 Stage protocol (the Spark-first replacement for the reference's append-only
 part files + metadata.json, backend.py:114-123,427-449):
 
@@ -11,7 +16,6 @@ part files + metadata.json, backend.py:114-123,427-449):
   * on re-run, a stage whose manifest fingerprint matches is SKIPPED and its
     parquet is read back — deterministic ids everywhere make this exact:
     resuming after a crash reproduces byte-identical tables.
-  * per-stage, per-partition metrics rows accumulate into <work_dir>/metrics.
 
 At cluster scale the parquet dirs become Iceberg tables and the manifest
 becomes snapshot metadata; the protocol is unchanged.
@@ -22,9 +26,10 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import CODE_VERSION
 from ..operators.assemble import (
@@ -35,10 +40,7 @@ from ..operators.assemble import (
 )
 from ..operators.canonicalize import build_canonical_map, build_entities
 from ..operators.embed import build_vectors
-from ..operators.extract import (
-    build_docs,
-    extract_pages_text,
-)
+from ..operators.extract import build_docs, extract_pages_text
 from ..operators.ingest import (
     build_annotations,
     chunks_from_annotations,
@@ -47,21 +49,133 @@ from ..operators.ingest import (
 )
 from ..sources.pages import synthesize_pages
 
-STAGES = [
-    "pages",
-    "extracted",
-    "docs",
-    "annotations",
-    "chunks",
-    "mentions",
-    "facts_raw",
-    "canonical_map",
-    "entities",
-    "topics",
-    "facts",
-    "relationships",
-    "vectors",
-]
+
+class StageContext(NamedTuple):
+    """What every stage function gets besides its declared inputs."""
+
+    spark: SparkSession
+    group_id: str
+    # width of the CPU-bound python stages (extract, annotate, embed)
+    width: int
+
+
+def default_width(spark: SparkSession) -> int:
+    """Width when the caller sets no repartition: two tasks per core."""
+    return spark.sparkContext.defaultParallelism * 2
+
+
+def _fan(df: DataFrame, width: int) -> DataFrame:
+    """Re-fan a scan narrower than `width` before a CPU-bound python stage.
+
+    The parquet scans feeding those stages cannot deliver parallelism by
+    themselves at small scale: AQE's 8MB advisory coalesces shuffles to a
+    few dense files, each a single (unsplittable) row group, so without an
+    explicit re-fan extract/annotate run that narrow no matter how many
+    cores exist. One cheap exchange of the text buys exact, uniform width
+    for ~100x its cost in downstream per-row CPU; a scan already at least
+    `width` wide is left alone (re-exchanging all text bought nothing at
+    larger scale factors, guide §2.4)."""
+    if df.rdd.getNumPartitions() < width:
+        return df.repartition(width, "url")
+    return df
+
+
+# The stage DAG, once: name -> (declared inputs, fn), in topological order
+# after the `pages` source stage. fn(ctx, **inputs) receives ONLY its
+# declared inputs, so the manifest lineage (`upstream`, and with it the
+# fingerprint) cannot miss a table a stage reads. PipelineRun.run()
+# materializes every entry with checkpoint-resume; recrawl_upsert
+# (operators/upsert.py) composes the same entries without checkpoints.
+STAGE_TABLE: dict[str, tuple[tuple[str, ...], Callable[..., DataFrame]]] = {
+    # url-hash repartition kept unconditional: besides the extract width it
+    # guarantees a balanced written file layout for every downstream scan
+    "extracted": (
+        ("pages",),
+        lambda c, pages: extract_pages_text(pages.repartition(c.width, "url")),
+    ),
+    "docs": (("extracted",), lambda c, extracted: build_docs(extracted, c.group_id)),
+    # fused ingest kernel over the ALREADY-extracted text: ONE Arrow
+    # crossing produces chunk+mention+fact rows, and extract_text (the
+    # dominant Python cost) runs exactly once in the whole DAG — in the
+    # extracted stage, which doubles as the byte-identity branch. The
+    # chunks/mentions/facts_raw tables are column-pruned JVM-side
+    # selects/explodes of the one annotations table.
+    "annotations": (
+        ("extracted",),
+        lambda c, extracted: build_annotations(
+            c.spark, _fan(extracted, c.width), c.group_id
+        ),
+    ),
+    "chunks": (
+        ("annotations",),
+        lambda c, annotations: chunks_from_annotations(annotations),
+    ),
+    "mentions": (
+        ("annotations",),
+        lambda c, annotations: mentions_from_annotations(annotations),
+    ),
+    "facts_raw": (
+        ("annotations",),
+        lambda c, annotations: facts_raw_from_annotations(annotations),
+    ),
+    # dimension-sized outputs: coalesce so we don't write 64 tiny files
+    "canonical_map": (
+        ("mentions",),
+        lambda c, mentions: build_canonical_map(
+            c.spark, mentions, c.group_id
+        ).coalesce(8),
+    ),
+    "entities": (
+        ("canonical_map", "mentions"),
+        lambda c, canonical_map, mentions: build_entities(
+            c.spark, canonical_map, mentions, c.group_id
+        ).coalesce(4),
+    ),
+    # corpus topics UNION the full ontology under the reserved
+    # group_id='ontology' namespace — the reference keeps the ontology in
+    # the same topics table/vector space behind that tenant filter
+    # (topic_resolver.py:357-369), so the vectors stage embeds both and
+    # search_topics(group_id='ontology') resolves against the ontology
+    # space. repartition(1), NOT coalesce(1): coalesce over this union
+    # (broadcast-joined corpus topics + local-relation ontology rows)
+    # collapses the whole upstream into one task and measured ~5x slower
+    # (5.5 s vs 1.4 s at sf0.1); the explicit exchange keeps the
+    # distinct/join parallel and only the tiny result lands on one writer
+    "topics": (
+        ("mentions",),
+        lambda c, mentions: build_topics(c.spark, mentions, c.group_id)
+        .unionByName(ontology_topics(c.spark))
+        .repartition(1),
+    ),
+    "facts": (
+        ("facts_raw", "canonical_map"),
+        lambda c, facts_raw, canonical_map: link_facts(
+            c.spark, facts_raw, canonical_map, c.group_id
+        ),
+    ),
+    "relationships": (
+        ("facts",),
+        lambda c, facts: build_relationships(facts, c.group_id),
+    ),
+    # per-kind vector index rows (reference: LanceDB per-table indices,
+    # incl. the topics index at indices.py:449-477)
+    "vectors": (
+        ("chunks", "entities", "facts", "topics"),
+        lambda c, chunks, entities, facts, topics: build_vectors(
+            chunks, entities, facts, topics, width=c.width
+        ),
+    ),
+}
+
+STAGES = ["pages", *STAGE_TABLE]
+
+
+def build_stage(
+    ctx: StageContext, name: str, tables: dict[str, DataFrame]
+) -> DataFrame:
+    """Stage `name`'s DataFrame, built from its declared inputs only."""
+    inputs, fn = STAGE_TABLE[name]
+    return fn(ctx, **{i: tables[i] for i in inputs})
 
 
 def _manifest_path(work_dir: str, stage: str) -> str:
@@ -188,29 +302,17 @@ class PipelineRun:
 
     # -- the DAG -----------------------------------------------------------
 
-    def _parallel(self, jobs: dict[str, callable]) -> dict[str, DataFrame]:
-        """Run a ready frontier of independent stages.
-
-        The grouping documents the dependency DAG (each dict is a frontier
-        a cluster scheduler could dispatch concurrently). On THIS host the
-        concurrent variant (driver threads submitting simultaneous Spark
-        jobs) was measured a clear net loss — e.g. the chunks/mentions/
-        facts_raw frontier took 23s wall concurrent vs 12s sequential at
-        local[8], and the relationships/vectors frontier 75s vs 19s:
-        simultaneous scans of the same parquet plus overlapping zstd writes
-        thrash a single-JVM local mode. Sequential dispatch is therefore
-        deliberate; on a real multi-executor cluster with idle slots,
-        swapping this loop for a ThreadPoolExecutor is a one-line change."""
-        return {name: fn() for name, fn in jobs.items()}
-
     def run(self) -> dict[str, DataFrame]:
-        spark, gid = self.spark, self.group_id
+        """Run every stage in STAGES order. Dispatch is sequential on
+        purpose: submitting independent stages' jobs from concurrent threads
+        measured a clear net loss in single-JVM local mode (overlapping scans
+        and zstd writes thrash)."""
 
         def _pages():
             # explicit repartition by doc/url hash: uniform ingest fan-out,
             # applied to the UDF *input* so synthesis itself parallelizes
             df = synthesize_pages(
-                spark, self.sf_dir, self.repartition, self.replicate
+                self.spark, self.sf_dir, self.repartition, self.replicate
             )
             if self.dedup_urls:
                 from ..sources.pages import dedupe_pages
@@ -218,166 +320,22 @@ class PipelineRun:
                 df = dedupe_pages(df)
             return df
 
-        pages = self._run_stage(
-            "pages",
-            [],
-            _pages,
-            params=f"{self.repartition}|{self.replicate}|{self.dedup_urls}",
-        )
-        # Width of the CPU-bound python stages. The parquet scans feeding
-        # them CANNOT deliver parallelism by themselves at small scale:
-        # AQE's 8MB advisory coalesces the url-dedup shuffle to ~16 dense
-        # output files, each a single (unsplittable) row group — so without
-        # an explicit re-fan, extract/annotate run 16-wide no matter how
-        # many cores exist, and scaling flatlines. One cheap exchange of
-        # the text buys exact, uniform width for ~100x its cost in
-        # downstream per-row CPU. Round-6: the ANNOTATIONS re-fan is gated
-        # on the actual scan width — the extracted stage's own url-hash
-        # repartition (kept unconditional: it also guarantees the written
-        # file layout is balanced for every downstream scan) means the
-        # extracted parquet re-scans at >= width balanced partitions at
-        # larger scale factors, and re-exchanging all text a second time
-        # bought nothing (measured ~2s of the sf1.0 annotations stage;
-        # guide §2.4).
-        width = self.repartition or self.spark.sparkContext.defaultParallelism * 2
-
-        def _fan(df: DataFrame) -> DataFrame:
-            if df.rdd.getNumPartitions() < width:
-                return df.repartition(width, "url")
-            return df
-
-        extracted = self._run_stage(
-            "extracted",
-            ["pages"],
-            lambda: extract_pages_text(pages.repartition(width, "url")),
-        )
-        # fused ingest kernel over the ALREADY-extracted text: ONE Arrow
-        # crossing produces chunk+mention+fact rows, and extract_text (the
-        # dominant Python cost) runs exactly once in the whole DAG — in the
-        # extracted stage, which doubles as the byte-identity branch. The
-        # chunks/mentions/facts_raw tables are column-pruned JVM-side
-        # selects/explodes of the one annotations table.
-        #
-        # Independent stages run as parallel groups (see _parallel): the DAG
-        # below dispatches each ready frontier concurrently.
-        g1 = self._parallel(
-            {
-                "docs": lambda: self._run_stage(
-                    "docs", ["extracted"], lambda: build_docs(extracted, gid)
-                ),
-                "annotations": lambda: self._run_stage(
-                    "annotations",
-                    ["extracted"],
-                    lambda: build_annotations(spark, _fan(extracted), gid),
-                ),
-            }
-        )
-        docs, annotations = g1["docs"], g1["annotations"]
-        g2 = self._parallel(
-            {
-                "chunks": lambda: self._run_stage(
-                    "chunks",
-                    ["annotations"],
-                    lambda: chunks_from_annotations(annotations),
-                ),
-                "mentions": lambda: self._run_stage(
-                    "mentions",
-                    ["annotations"],
-                    lambda: mentions_from_annotations(annotations),
-                ),
-                "facts_raw": lambda: self._run_stage(
-                    "facts_raw",
-                    ["annotations"],
-                    lambda: facts_raw_from_annotations(annotations),
-                ),
-            }
-        )
-        chunks, mentions, facts_raw = g2["chunks"], g2["mentions"], g2["facts_raw"]
-        # dimension-sized outputs: coalesce so we don't write 64 tiny files
-        g3 = self._parallel(
-            {
-                "canonical_map": lambda: self._run_stage(
-                    "canonical_map",
-                    ["mentions"],
-                    lambda: build_canonical_map(spark, mentions, gid).coalesce(8),
-                ),
-                # corpus topics UNION the full ontology under the reserved
-                # group_id='ontology' namespace — the reference keeps the
-                # ontology in the same topics table/vector space behind that
-                # tenant filter (topic_resolver.py:357-369), so the vectors
-                # stage below embeds both and search_topics(group_id=
-                # 'ontology') resolves against the ontology space
-                # repartition(1), NOT coalesce(1): coalesce over this
-                # union (broadcast-joined corpus topics + local-relation
-                # ontology rows) collapses the whole upstream into one
-                # task and measured ~5x slower (5.5 s vs 1.4 s at sf0.1);
-                # the explicit exchange keeps the distinct/join parallel
-                # and only the tiny 102-row result lands on one writer
-                "topics": lambda: self._run_stage(
-                    "topics",
-                    ["mentions"],
-                    lambda: build_topics(spark, mentions, gid)
-                    .unionByName(ontology_topics(spark))
-                    .repartition(1),
-                ),
-            }
-        )
-        canonical_map, topics = g3["canonical_map"], g3["topics"]
-        g4 = self._parallel(
-            {
-                "entities": lambda: self._run_stage(
-                    "entities",
-                    ["canonical_map", "mentions"],
-                    lambda: build_entities(
-                        spark, canonical_map, mentions, gid
-                    ).coalesce(4),
-                ),
-                "facts": lambda: self._run_stage(
-                    "facts",
-                    ["facts_raw", "canonical_map"],
-                    lambda: link_facts(spark, facts_raw, canonical_map, gid),
-                ),
-            }
-        )
-        entities, facts = g4["entities"], g4["facts"]
-        g5 = self._parallel(
-            {
-                "relationships": lambda: self._run_stage(
-                    "relationships",
-                    ["facts"],
-                    lambda: build_relationships(facts, gid),
-                ),
-                # per-kind vector index rows (reference: LanceDB per-table
-                # indices, incl. the topics index at indices.py:449-477)
-                "vectors": lambda: self._run_stage(
-                    "vectors",
-                    ["chunks", "entities", "facts", "topics"],
-                    lambda: build_vectors(
-                        chunks, entities, facts, topics, width=width
-                    ),
-                ),
-            }
-        )
-        relationships, vectors = g5["relationships"], g5["vectors"]
-        # threaded groups append out of order; normalize to STAGES order so
-        # executed/skipped read deterministically
-        self.executed = [s for s in STAGES if s in set(self.executed)]
-        self.skipped = [s for s in STAGES if s in set(self.skipped)]
-        return {
-            "pages": pages,
-            "extracted": extracted,
-            "docs": docs,
-            "annotations": annotations,
-            "chunks": chunks,
-            "mentions": mentions,
-            "facts_raw": facts_raw,
-            "canonical_map": canonical_map,
-            "entities": entities,
-            "topics": topics,
-            "facts": facts,
-            "relationships": relationships,
-            "vectors": vectors,
+        tables = {
+            "pages": self._run_stage(
+                "pages",
+                [],
+                _pages,
+                params=f"{self.repartition}|{self.replicate}|{self.dedup_urls}",
+            )
         }
+        ctx = StageContext(
+            self.spark, self.group_id, self.repartition or default_width(self.spark)
+        )
+        for name, (inputs, _) in STAGE_TABLE.items():
+            tables[name] = self._run_stage(
+                name, list(inputs), lambda: build_stage(ctx, name, tables)
+            )
+        return tables
 
 
 def run_pipeline(
