@@ -6,6 +6,7 @@ traps from entity_dedup.py:137-165."""
 import random
 
 import pyspark.sql.functions as F
+import pytest
 
 from vanna_financial_knowledge_graph_spark.operators.canonicalize import (
     connected_components,
@@ -75,6 +76,20 @@ def test_cc_small_and_distributed_paths_agree(spark):
     assert _cc_spark(spark, nodes, edges, distributed=True) == _cc_spark(
         spark, nodes, edges, distributed=False
     )
+
+
+def test_cc_failed_iteration_leaves_no_scratch(spark, tmp_path, monkeypatch):
+    """An iteration that raises must still remove the vkg_cc_* scratch dir
+    of the distributed path."""
+    monkeypatch.setenv("VKG_CC_SCRATCH", str(tmp_path))
+
+    def _boom(self):
+        raise RuntimeError("iteration failed")
+
+    monkeypatch.setattr(type(spark.range(1)), "count", _boom)
+    with pytest.raises(RuntimeError, match="iteration failed"):
+        _cc_spark(spark, ["a", "b", "c"], [("a", "b")])
+    assert not list(tmp_path.glob("vkg_cc_*"))
 
 
 # --- canonical-map merge rules (reference dedup traps) -----------------------

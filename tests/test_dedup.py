@@ -111,6 +111,23 @@ def test_lsh_bucket_cap_drops_megabuckets(spark):
     assert pairs.count() == 0
 
 
+def test_duplicate_doc_id_rows_emit_no_self_pairs(docs):
+    """A doc_id repeated in the input lands twice in its own buckets; the
+    SimHash and LSH pair generators must not pair it with itself."""
+    sig = D.minhash_signatures(D.shingles(docs), 32)
+    for name, once, twice in (
+        (
+            "simhash",
+            D.simhash_near_dups(docs, max_hamming=8),
+            D.simhash_near_dups(docs.union(docs), max_hamming=8),
+        ),
+        ("lsh", D.lsh_candidate_pairs(sig), D.lsh_candidate_pairs(sig.union(sig))),
+    ):
+        got = {(r["doc_a"], r["doc_b"]) for r in twice.collect()}
+        assert not [p for p in got if p[0] == p[1]], (name, got)
+        assert got == {(r["doc_a"], r["doc_b"]) for r in once.collect()}, name
+
+
 def test_minhash_signature_deterministic(spark, docs):
     a = D.minhash_signatures(D.shingles(docs), 16).collect()
     b = D.minhash_signatures(D.shingles(docs), 16).collect()

@@ -243,3 +243,29 @@ def test_embed_text_unicode_invariants(kg):
     }
     unstable = {c for c in chars if c.lower() != c or c.isspace()}
     assert not unstable, f"case/space-unstable non-ASCII chars: {unstable!r}"
+
+
+def test_stage_schemas_match_schemas_py(kg):
+    """Every table schemas.py declares is written with exactly that layout:
+    same field names in order, same types. Parquet read-backs are nullable,
+    so nullability is not compared."""
+    from pyspark.sql.types import StructType
+
+    from vanna_financial_knowledge_graph_spark import schemas
+
+    declared = {
+        name.lower(): s
+        for name, s in vars(schemas).items()
+        if isinstance(s, StructType)
+    }
+    assert set(declared) == {
+        "pages", "docs", "annotations", "chunks", "mentions", "facts_raw",
+        "entities", "canonical_map", "facts", "relationships", "topics",
+    }
+
+    def layout(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    for stage, schema in declared.items():
+        # kg[stage] is spark.read.parquet of the stage's output directory
+        assert layout(kg[stage].schema) == layout(schema), stage

@@ -172,15 +172,21 @@ def test_brute_force_topk_no_refan_when_wide(spark):
     assert "Exchange hashpartitioning" not in before_window
 
 
-def test_mentions_stage_is_narrow(spark, kg):
-    """Mention detection must add no shuffle: one mapInPandas over chunks."""
-    from vanna_financial_knowledge_graph_spark.operators.mentions import (
-        detect_mentions,
+def test_annotations_stage_is_narrow(spark, kg):
+    """The ingest kernel must add no shuffle: one mapInArrow over the
+    extracted text, and the mentions/facts_raw explodes over it stay narrow."""
+    from vanna_financial_knowledge_graph_spark.operators.ingest import (
+        build_annotations,
+        facts_raw_from_annotations,
+        mentions_from_annotations,
     )
 
-    p = _plan(detect_mentions(spark, kg["chunks"]))
+    ann = build_annotations(spark, kg["extracted"])
+    p = _plan(ann)
     assert "Exchange" not in p
-    assert "MapInPandas" in p
+    assert "MapInArrow" in p
+    for table in (mentions_from_annotations(ann), facts_raw_from_annotations(ann)):
+        assert "Exchange" not in _plan(table)
 
 
 def test_whole_stage_codegen_in_textstats(spark):

@@ -208,142 +208,145 @@ def connected_components(
         )
         return spark.read.parquet(path)
 
-    labels = _roundtrip(
-        nodes.select(F.col("node"), F.col("node").alias("label")), "labels_0"
-    )
-
-    # Delta propagation (round-6): after the mega-components converge, most
-    # nodes' labels are stable, yet the old loop re-shuffled every edge and
-    # re-aggregated every node each iteration. An offer from an UNCHANGED
-    # neighbor is redundant (its label was already folded in the iteration
-    # it last changed), so:
-    #   * min-offers flow only from edges whose dst changed last iteration,
-    #   * the pointer-jump lookup is restricted to nodes whose label points
-    #     into the recently-changed set (a stale pointer is impossible: a
-    #     node that acquires a label is jump-examined the same iteration,
-    #     and a node whose label's label later drops sees that target in
-    #     the next delta),
-    #   * convergence = empty delta, replacing the full-table changed-count
-    #     join.
-    # The fixpoint is the same component-min labeling — improvements land
-    # with at most the same one-iteration delay the original schedule had —
-    # validated analytically at 1.5M nodes by scripts/bench_cc_scale.py and
-    # against the driver union-find by pytest. Late iterations now cost
-    # delta-sized joins plus map-side scans of the checkpointed frames
-    # instead of full shuffles (guide §2.4).
-    delta = labels
-    prev_changed = None
-    for _it in range(max_iter):
-        _t0 = _time.time()
-        # once the delta is provably small (its exact row count is last
-        # iteration's `changed`), hint it broadcast so the big frames (sym,
-        # labels, stepped) stop shuffling — late iterations become pure
-        # map-side scans; checkpointed frames carry estimated stats the
-        # planner won't trust for an automatic conversion
-        small = prev_changed is not None and prev_changed <= 100_000
-
-        def _b(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if small else df
-
-        offers = (
-            sym.alias("e")
-            .join(_b(delta).alias("d"), F.col("e.dst") == F.col("d.node"))
-            .select(F.col("e.src").alias("node"), F.col("d.label").alias("label"))
+    # the scratch dir goes on every exit, an iteration that raises included
+    try:
+        labels = _roundtrip(
+            nodes.select(F.col("node"), F.col("node").alias("label")), "labels_0"
         )
-        # two-phase salted min: partial min per (node, salt) bucket, then
-        # final min per node (min is associative, so salting is lossless)
-        upd = (
-            offers.withColumn(
-                "salt", F.pmod(F.xxhash64(F.col("label")), F.lit(_SALT_BUCKETS))
+
+        # Delta propagation (round-6): after the mega-components converge, most
+        # nodes' labels are stable, yet the old loop re-shuffled every edge and
+        # re-aggregated every node each iteration. An offer from an UNCHANGED
+        # neighbor is redundant (its label was already folded in the iteration
+        # it last changed), so:
+        #   * min-offers flow only from edges whose dst changed last iteration,
+        #   * the pointer-jump lookup is restricted to nodes whose label points
+        #     into the recently-changed set (a stale pointer is impossible: a
+        #     node that acquires a label is jump-examined the same iteration,
+        #     and a node whose label's label later drops sees that target in
+        #     the next delta),
+        #   * convergence = empty delta, replacing the full-table changed-count
+        #     join.
+        # The fixpoint is the same component-min labeling — improvements land
+        # with at most the same one-iteration delay the original schedule had —
+        # validated analytically at 1.5M nodes by scripts/bench_cc_scale.py and
+        # against the driver union-find by pytest. Late iterations now cost
+        # delta-sized joins plus map-side scans of the checkpointed frames
+        # instead of full shuffles (guide §2.4).
+        delta = labels
+        prev_changed = None
+        for _it in range(max_iter):
+            _t0 = _time.time()
+            # once the delta is provably small (its exact row count is last
+            # iteration's `changed`), hint it broadcast so the big frames (sym,
+            # labels, stepped) stop shuffling — late iterations become pure
+            # map-side scans; checkpointed frames carry estimated stats the
+            # planner won't trust for an automatic conversion
+            small = prev_changed is not None and prev_changed <= 100_000
+
+            def _b(df: DataFrame) -> DataFrame:
+                return F.broadcast(df) if small else df
+
+            offers = (
+                sym.alias("e")
+                .join(_b(delta).alias("d"), F.col("e.dst") == F.col("d.node"))
+                .select(F.col("e.src").alias("node"), F.col("d.label").alias("label"))
             )
-            .groupBy("node", "salt")
-            .agg(F.min("label").alias("label"))
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        # strict improvements only
-        s_delta = (
-            _b(upd).alias("u")
-            .join(labels.alias("l"), "node")
-            .where(F.col("u.label") < F.col("l.label"))
-            .select("node", F.col("u.label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        stepped = (
-            labels.alias("l")
-            .join(_b(s_delta).alias("s"), "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("l.label"), F.coalesce(F.col("s.label"), F.col("l.label"))
-                ).alias("label"),
+            # two-phase salted min: partial min per (node, salt) bucket, then
+            # final min per node (min is associative, so salting is lossless)
+            upd = (
+                offers.withColumn(
+                    "salt", F.pmod(F.xxhash64(F.col("label")), F.lit(_SALT_BUCKETS))
+                )
+                .groupBy("node", "salt")
+                .agg(F.min("label").alias("label"))
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
             )
-            .localCheckpoint(eager=True)
-        )
-        # pointer jumping (label <- label's label), delta-targeted: look up
-        # stepped() only for keys that can yield an improvement — the
-        # labels held by just-changed nodes and the changed node ids
-        # themselves. O(log diameter) convergence is preserved.
-        look_keys = (
-            s_delta.select(F.col("label").alias("lnode"))
-            .union(s_delta.select(F.col("node").alias("lnode")))
-            .union(delta.select(F.col("node").alias("lnode")))
-            .distinct()
-        )
-        lk = stepped.join(
-            _b(look_keys), stepped["node"] == look_keys["lnode"]
-        ).select(F.col("lnode"), F.col("label").alias("llabel"))
-        j_delta = (
-            stepped.alias("a")
-            .join(_b(lk).alias("b"), F.col("a.label") == F.col("b.lnode"))
-            .where(F.col("b.llabel") < F.col("a.label"))
-            .groupBy(F.col("a.node").alias("node"))
-            .agg(F.min("b.llabel").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        new_labels = _roundtrip(
-            stepped.alias("t")
-            .join(j_delta.alias("j"), "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("t.label"), F.coalesce(F.col("j.label"), F.col("t.label"))
-                ).alias("label"),
-            ),
-            f"labels_{(_it + 1) % 2}",
-        )
-        delta = (
-            _b(
-                s_delta.select("node")
-                .union(j_delta.select("node"))
+            # strict improvements only
+            s_delta = (
+                _b(upd).alias("u")
+                .join(labels.alias("l"), "node")
+                .where(F.col("u.label") < F.col("l.label"))
+                .select("node", F.col("u.label").alias("label"))
+                .localCheckpoint(eager=True)
+            )
+            stepped = (
+                labels.alias("l")
+                .join(_b(s_delta).alias("s"), "node", "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("l.label"), F.coalesce(F.col("s.label"), F.col("l.label"))
+                    ).alias("label"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            # pointer jumping (label <- label's label), delta-targeted: look up
+            # stepped() only for keys that can yield an improvement — the
+            # labels held by just-changed nodes and the changed node ids
+            # themselves. O(log diameter) convergence is preserved.
+            look_keys = (
+                s_delta.select(F.col("label").alias("lnode"))
+                .union(s_delta.select(F.col("node").alias("lnode")))
+                .union(delta.select(F.col("node").alias("lnode")))
                 .distinct()
             )
-            .join(new_labels, "node")
-            .localCheckpoint(eager=True)
-        )
-        changed = delta.count()
-        prev_changed = changed
-        labels = new_labels
-        # observability hook (scripts/bench_cc_scale.py): per-iteration
-        # wall + label-change count, no extra jobs beyond the existing
-        # convergence check
-        if stats is not None:
-            stats.setdefault("iterations", []).append(
-                {
-                    "iter": _it,
-                    "changed": changed,
-                    "sec": round(_time.time() - _t0, 2),
-                }
+            lk = stepped.join(
+                _b(look_keys), stepped["node"] == look_keys["lnode"]
+            ).select(F.col("lnode"), F.col("label").alias("llabel"))
+            j_delta = (
+                stepped.alias("a")
+                .join(_b(lk).alias("b"), F.col("a.label") == F.col("b.lnode"))
+                .where(F.col("b.llabel") < F.col("a.label"))
+                .groupBy(F.col("a.node").alias("node"))
+                .agg(F.min("b.llabel").alias("label"))
+                .localCheckpoint(eager=True)
             )
-        if changed == 0:
-            break
-    # hand the result back OFF the scratch dir (one checkpoint of the final
-    # parquet scan — its stats are real file sizes, so nothing compounds),
-    # then drop the scratch files
-    out = labels.withColumnRenamed("label", "component").localCheckpoint(
-        eager=True
-    )
-    _shutil.rmtree(ckpt_dir, ignore_errors=True)
+            new_labels = _roundtrip(
+                stepped.alias("t")
+                .join(j_delta.alias("j"), "node", "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("t.label"), F.coalesce(F.col("j.label"), F.col("t.label"))
+                    ).alias("label"),
+                ),
+                f"labels_{(_it + 1) % 2}",
+            )
+            delta = (
+                _b(
+                    s_delta.select("node")
+                    .union(j_delta.select("node"))
+                    .distinct()
+                )
+                .join(new_labels, "node")
+                .localCheckpoint(eager=True)
+            )
+            changed = delta.count()
+            prev_changed = changed
+            labels = new_labels
+            # observability hook (scripts/bench_cc_scale.py): per-iteration
+            # wall + label-change count, no extra jobs beyond the existing
+            # convergence check
+            if stats is not None:
+                stats.setdefault("iterations", []).append(
+                    {
+                        "iter": _it,
+                        "changed": changed,
+                        "sec": round(_time.time() - _t0, 2),
+                    }
+                )
+            if changed == 0:
+                break
+        # hand the result back OFF the scratch dir (one checkpoint of the final
+        # parquet scan — its stats are real file sizes, so nothing compounds),
+        # then drop the scratch files
+        out = labels.withColumnRenamed("label", "component").localCheckpoint(
+            eager=True
+        )
+    finally:
+        _shutil.rmtree(ckpt_dir, ignore_errors=True)
     return out
 
 

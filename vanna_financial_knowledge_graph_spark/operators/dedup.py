@@ -163,6 +163,7 @@ def lsh_candidate_pairs(
         .select(
             F.least("x", "y").alias("doc_a"), F.greatest("x", "y").alias("doc_b")
         )
+        .where(F.col("doc_a") != F.col("doc_b"))
         .distinct()
     )
 
@@ -440,7 +441,9 @@ def simhash_near_dups(
                 F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))
             ).alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(
+            (F.col("doc_a") != F.col("doc_b")) & (F.col("hamming") <= max_hamming)
+        )
         .distinct()
     )
 

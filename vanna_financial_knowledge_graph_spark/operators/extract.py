@@ -1,15 +1,14 @@
-"""Extraction stage: pages -> extracted text -> docs + chunks.
+"""Extraction stage: pages -> extracted text -> docs.
 
 Spark-first layout: one Arrow-batched mapInPandas pass over the pages table
-runs the *same pure functions* the single-node oracle uses
-(functions/textops.extract_text + chunk_text), so the byte-identity invariant
-holds by construction. Everything downstream of the UDF boundary is plain
-DataFrame code that Catalyst can prune/push down.
+runs the *same pure function* the single-node oracle uses
+(functions/textops.extract_text), so the byte-identity invariant holds by
+construction. Everything downstream of the UDF boundary is plain DataFrame
+code that Catalyst can prune/push down. Chunking runs later, in the ingest
+kernel (operators/ingest.py::build_annotations).
 
-Reference semantics covered: chunking (markdown.py:36-242), chunk ids
-(utils/text.py:48-50), document-date propagation onto chunks
-(backend.py:143-153 schema). The reference's PDF-OCR source (pdf.py:39-99)
-is replaced by the deterministic HTML extractor per BASELINE.json input_hint.
+The reference's PDF-OCR source (pdf.py:39-99) is replaced by the
+deterministic HTML extractor per BASELINE.json input_hint.
 """
 
 from __future__ import annotations
@@ -20,8 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.textops import chunk_id, chunk_text, chunk_uuid, doc_uuid, extract_text
-from ..schemas import CHUNKS
+from ..functions.textops import extract_text
 
 GROUP_ID = "default"
 
@@ -69,39 +67,6 @@ def build_docs(extracted: DataFrame, group_id: str = GROUP_ID) -> DataFrame:
         ).alias("metadata"),
         F.lit(group_id).alias("group_id"),
     )
-
-
-def build_chunks(extracted: DataFrame, group_id: str = GROUP_ID) -> DataFrame:
-    """Chunk the extracted text; one UDF pass, rows explode inside the batch.
-
-    Positions are per-document (assigned by the pure chunker), so no global
-    ordering shuffle is ever needed — the reference's posexplode-style
-    positional indexing (SURVEY.md W8).
-    """
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, text, ts in zip(pdf["url"], pdf["text"], pdf["warc_ts"]):
-                d_uuid = doc_uuid(url)
-                d_date = str(pd.Timestamp(ts).date()) if ts is not None else None
-                for ch in chunk_text(text or ""):
-                    rows.append(
-                        {
-                            "chunk_uuid": chunk_uuid(url, ch["position"]),
-                            "chunk_id": chunk_id(d_uuid[:12], ch["position"]),
-                            "doc_uuid": d_uuid,
-                            "url": url,
-                            "content": ch["content"],
-                            "header_path": ch["header_path"],
-                            "position": ch["position"],
-                            "document_date": d_date,
-                            "group_id": group_id,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNKS.fields])
-
-    return extracted.select("url", "warc_ts", "text").mapInPandas(_run, schema=CHUNKS)
 
 
 def byte_identity_mismatches(pages: DataFrame, extracted: DataFrame) -> DataFrame:

@@ -86,6 +86,32 @@ FACTS_RAW = T.StructType(
     ]
 )
 
+# Fused ingest row (operators/ingest.py::build_annotations): one CHUNKS row
+# with the chunk's MENTIONS and FACTS_RAW rows nested as arrays, each minus
+# the keys the chunk row already carries, all nested fields nullable.
+_CHUNK_KEYS = {"chunk_uuid", "doc_uuid", "group_id"}
+
+
+def _nested(table: T.StructType) -> T.ArrayType:
+    return T.ArrayType(
+        T.StructType(
+            [
+                T.StructField(f.name, f.dataType, True)
+                for f in table.fields
+                if f.name not in _CHUNK_KEYS
+            ]
+        )
+    )
+
+
+ANNOTATIONS = T.StructType(
+    [
+        *CHUNKS.fields,
+        T.StructField("mentions", _nested(MENTIONS), True),
+        T.StructField("facts", _nested(FACTS_RAW), True),
+    ]
+)
+
 ENTITIES = T.StructType(
     [
         T.StructField("uuid", T.StringType(), False),
@@ -149,15 +175,6 @@ TOPICS = T.StructType(
         # two-level hierarchy (reference Topic.parent_topic, types/topics.py)
         T.StructField("parent_uuid", T.StringType(), True),
         T.StructField("parent_name", T.StringType(), True),
-        T.StructField("group_id", T.StringType(), False),
-    ]
-)
-
-METRICS = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("rows_out", T.LongType(), False),
         T.StructField("group_id", T.StringType(), False),
     ]
 )

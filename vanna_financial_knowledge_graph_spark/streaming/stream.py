@@ -3,19 +3,27 @@
 The reference is strictly batch (SURVEY.md §2.9) and the north rule's
 incremental requirement is checkpoint-resume of batch stages — which
 plans/pipeline.py provides. This module adds the optional streaming skin:
-`readStream` over a pages directory with `Trigger.AvailableNow` runs the
-same extraction DAG incrementally, exactly-once per file, writing the same
-chunk schema. New page files landing between runs are picked up from the
-stream checkpoint — the Spark-idiomatic version of "re-run the batch DAG on
-what's new".
+`readStream` over a pages directory with `Trigger.AvailableNow` composes the
+batch DAG's own extract and ingest kernels (extract_pages_text ->
+build_annotations -> chunks_from_annotations) incrementally, exactly-once
+per file, so a streamed chunk row equals its batch row. New page files
+landing between runs are picked up from the stream checkpoint — the
+Spark-idiomatic version of "re-run the batch DAG on what's new".
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import build_chunks, extract_pages_text
+from ..operators.extract import extract_pages_text
+from ..operators.ingest import build_annotations, chunks_from_annotations
 from ..schemas import PAGES
+
+
+def _chunks(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    return chunks_from_annotations(
+        build_annotations(spark, extract_pages_text(pages))
+    )
 
 
 def incremental_chunks(
@@ -34,7 +42,7 @@ def incremental_chunks(
         .format("parquet")
         .load(pages_dir)
     )
-    chunks = build_chunks(extract_pages_text(pages))
+    chunks = _chunks(spark, pages)
     return (
         chunks.writeStream.format("parquet")
         .option("path", out_dir)
@@ -62,7 +70,7 @@ def incremental_deduped_chunks(
         spark.readStream.schema(PAGES).format("parquet").load(pages_dir)
     )
     deduped = pages.withWatermark("warc_ts", watermark).dropDuplicates(["url"])
-    chunks = build_chunks(extract_pages_text(deduped))
+    chunks = _chunks(spark, deduped)
     return (
         chunks.writeStream.format("parquet")
         .option("path", out_dir)
