@@ -36,8 +36,6 @@ from ..schemas import ANNOTATIONS, CHUNKS, FACTS_RAW, MENTIONS
 
 GROUP_ID = "default"
 
-_FACT_KEYS = ANNOTATIONS["facts"].dataType.elementType.names
-
 
 def build_annotations(
     spark: SparkSession, extracted: DataFrame, group_id: str = GROUP_ID
@@ -85,10 +83,11 @@ def build_annotations(
                     cols["position"].append(ch["position"])
                     cols["document_date"].append(d_date)
                     cols["group_id"].append(group_id)
+                    # pyarrow builds each struct from the dict keys the
+                    # schema names and ignores the rest (facts carry their
+                    # chunk_uuid)
                     cols["mentions"].append(mentions)
-                    cols["facts"].append(
-                        [{k: f[k] for k in _FACT_KEYS} for f in facts]
-                    )
+                    cols["facts"].append(facts)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(cols[f.name], type=f.type) for f in schema],
                 schema=schema,
