@@ -49,7 +49,7 @@ def main() -> int:
         ("ann_topk_bruteforce", "corpus streams vs broadcast queries + rank window"),
         ("kg_two_hop_neighbors", "graph read path: broadcast seed, count/topk"),
         ("kg_search_two_stage", "two-stage search: hit set broadcast, index never shuffles"),
-        ("kg_context_build", "GraphRAG context: cached shared branches, tier caps"),
+        ("kg_context_build", "GraphRAG context: staged scans, one tier-pick collect"),
         ("kg_bucketed_join", "zero-exchange co-located join over bucketed tables"),
         ("sessionize_events", "single user_id exchange reused by compound groupBy"),
         ("minhash_near_dup", "shingle -> codegen min-agg -> bucket pair explode"),
@@ -86,6 +86,10 @@ def main() -> int:
                 EMBED_DIM,
                 embed_text,
             )
+            from vanna_financial_knowledge_graph_spark.operators.context import (
+                DEFAULT_CAPS,
+                tier_pick,
+            )
             from vanna_financial_knowledge_graph_spark.operators.dedup import (
                 cosine_literal_expr,
             )
@@ -105,7 +109,7 @@ def main() -> int:
             )
             topk.count()
             out += [
-                f"## {name} — staged driver-assisted composition (round-6 shape)",
+                f"## {name} — staged scans, one tier-pick collect",
                 "",
                 "build_context collects each dimension-sized intermediate",
                 "(seed uuid, top-k neighbor uuids + topic uuids in one",
@@ -115,21 +119,25 @@ def main() -> int:
                 "skinny cached (chunk_uuid, score) projection that both the",
                 "global top-k and the candidate join reuse. The candidate",
                 "hit set (corpus-scale for hot entities, ~212k chunks at",
-                "sf1.0) is NEVER driver-collected or broadcast: one",
-                "map-side-partial groupBy dedups the source tags and joins",
-                "the cached scores on chunk_uuid. Sub-plan 1 — the only",
-                "corpus-wide pass, a TakeOrderedAndProject over the",
-                "codegen'd literal cosine (never a full sort):",
+                "sf1.0) is NEVER driver-collected or broadcast. Sub-plan 1",
+                "— the only corpus-wide pass, a TakeOrderedAndProject over",
+                "the codegen'd literal cosine (never a full sort):",
                 "",
                 "```",
                 _formatted(topk),
                 "```",
                 "",
-                "Sub-plan 2 — candidate source dedup + score join: tag",
-                "rows collapse map-side before one exchange, then join the",
-                "skinny cached scores (no embedding bytes through any",
-                "exchange; score is a function of chunk_uuid, so the",
-                "source winner needs no score column):",
+                "Sub-plan 2 — the final selection (`tier_pick`), collected",
+                "once: source tags collapse map-side before one exchange and",
+                "join the skinny scores (no embedding bytes through any",
+                "exchange); each candidate explodes into its high/low and",
+                "topic tiers, and a row_number per tier keeps the capped",
+                "rows — the WindowGroupLimit below the tier exchange keeps",
+                "at most max(cap) rows per tier and partition. The driver",
+                "then drops the topic rows already admitted to high/low and",
+                "hands the selection back as an Arrow LocalRelation",
+                "(session.local_frame) for the content join. Here every",
+                "relationship chunk stands in for the candidate set:",
                 "",
                 "```",
             ]
@@ -150,9 +158,11 @@ def main() -> int:
                     "has_topic"
                 ),
             )
-            joined = per_chunk.join(scored_sk, "chunk_uuid")
-            joined.count()
-            out += [_formatted(joined), "```", ""]
+            picked = tier_pick(
+                per_chunk.join(scored_sk, "chunk_uuid"), DEFAULT_CAPS, 0.2
+            )
+            picked.collect()
+            out += [_formatted(picked), "```", ""]
             continue
         df = qs[name](spark, sf_dir)
         df.count()  # let AQE finalize so the dumped plan is the executed shape

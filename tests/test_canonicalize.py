@@ -92,6 +92,25 @@ def test_cc_failed_iteration_leaves_no_scratch(spark, tmp_path, monkeypatch):
     assert not list(tmp_path.glob("vkg_cc_*"))
 
 
+
+def test_cc_off_local_mode_needs_scratch_env(spark, monkeypatch):
+    """Off local mode the per-iteration scratch must be a shared
+    filesystem: with VKG_CC_SCRATCH unset the distributed path fails fast,
+    before it checkpoints, writes or iterates anything."""
+    import tempfile
+
+    from pyspark.sql import DataFrame
+
+    def _ran(*_a, **_k):
+        raise AssertionError("distributed CC started work")
+
+    monkeypatch.delenv("VKG_CC_SCRATCH", raising=False)
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    monkeypatch.setattr(DataFrame, "localCheckpoint", _ran)
+    monkeypatch.setattr(tempfile, "mkdtemp", _ran)
+    with pytest.raises(RuntimeError, match="VKG_CC_SCRATCH"):
+        _cc_spark(spark, ["a", "b", "c"], [("a", "b")])
+
 # --- canonical-map merge rules (reference dedup traps) -----------------------
 
 

@@ -1,6 +1,8 @@
 """Deduplication operator tests: exact, MinHash-LSH, SimHash, n-gram
 Jaccard, embedding near-dup."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -358,3 +360,69 @@ def test_embedding_near_dups_lsh_recall(spark):
     assert got <= truth  # precision 1.0: every emitted pair verified exact
     assert truth, "fixture planted no in-threshold pairs"
     assert len(got & truth) / len(truth) >= 0.95, (len(got), len(truth))
+
+
+def _formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def test_jaccard_verify_broadcasts_only_pairs(spark, docs):
+    """Only the skinny pair set may broadcast: no BroadcastExchange input
+    carries a shingle array (sh_a / sh_b)."""
+    pairs = spark.createDataFrame([(1, 2), (1, 3), (1, 4)], "doc_a long, doc_b long")
+    out = D.jaccard_verify(pairs, D.shingles(docs), threshold=0.5)
+    got = {(r["doc_a"], r["doc_b"]) for r in out.collect()}
+    assert got == {(1, 2), (1, 3)}
+    sections = _formatted_plan(out).split("\n\n")
+    bcast = [s for s in sections if re.match(r"\(\d+\) BroadcastExchange", s)]
+    assert bcast, "the pair set must still broadcast"
+    for s in bcast:
+        assert "sh_a" not in s and "sh_b" not in s, s
+
+
+def _subtree(plan: str, marker: str) -> list[str]:
+    """Lines of the first plan node containing every marker word, then
+    its descendants (the deeper-indented lines that follow it)."""
+    lines = plan.splitlines()
+
+    def depth(ln: str) -> int:
+        return re.search(r"[A-Za-z]", ln).start()
+
+    i = next(i for i, ln in enumerate(lines) if all(m in ln for m in marker.split()))
+    out = [lines[i]]
+    for ln in lines[i + 1 :]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+@pytest.mark.parametrize("gen", ["lsh", "simhash"])
+def test_bucket_size_counted_before_collect(spark, gen):
+    """A bucket of max_bucket + 1 members is dropped by a count filter
+    BELOW the collect_list aggregate, so no hot bucket's member array is
+    ever built; the normal bucket still pairs."""
+    max_bucket = 5
+    hot = list(range(1, max_bucket + 2))
+    if gen == "lsh":
+        sig = spark.createDataFrame(
+            [(d, list(range(32))) for d in hot]
+            + [(d, list(range(100, 132))) for d in (100, 101)],
+            "doc_id long, signature array<long>",
+        )
+        out = D.lsh_candidate_pairs(sig, max_bucket=max_bucket)
+    else:
+        docs = spark.createDataFrame(
+            [(d, BASE) for d in hot]
+            + [(d, "agriculture subsidies and rural credit") for d in (100, 101)],
+            "doc_id long, text string",
+        )
+        out = D.simhash_near_dups(docs, max_bucket=max_bucket)
+    assert {(r["doc_a"], r["doc_b"]) for r in out.collect()} == {(100, 101)}
+    below = _subtree(
+        out._jdf.queryExecution().optimizedPlan().toString(), "Aggregate collect_list"
+    )[1:]
+    assert any("Filter" in ln for ln in below), below
+    assert any("count(" in ln for ln in below), below

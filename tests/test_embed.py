@@ -205,6 +205,85 @@ def test_context_caps_respected_hand_fixture(spark):
     assert sum(1 for _, s in got if s == "global") <= 1
 
 
+def test_context_tier_semantics_hand_fixture(spark):
+    """Exact tier rows for a hand graph with hand-set chunk scores.
+
+    Seed e1 has one neighbor (e2) and one topic (t1). c1 is tagged both
+    entity and topic; c3 both neighbor and topic; c4-c6 are topic-only.
+    The topic cap (3) admits the three best topic candidates c1, c3, c4
+    BEFORE the chunks already admitted to high/low are dropped, so only
+    c3 (high cap 1 keeps it out of high) and c4 remain: fewer topic rows
+    than the cap. c7 and c8 have zero embeddings (NULL score): they sort
+    last in low, so the low cap (2) keeps c2 and c7, never c8."""
+    import math
+
+    from vanna_financial_knowledge_graph_spark.functions.embedding import (
+        EMBED_DIM,
+        embed_text,
+    )
+    from vanna_financial_knowledge_graph_spark.operators.context import build_context
+
+    query = "merger"
+    qv = embed_text(query, EMBED_DIM)
+    d = next(i for i, x in enumerate(qv) if x)
+
+    def vec(score):
+        v = [0.0] * EMBED_DIM
+        if score is not None:
+            v[d] = math.copysign(score, qv[d])
+            v[(d + 1) % EMBED_DIM] = math.sqrt(1.0 - score * score)
+        return v
+
+    scores = {
+        "c1": 0.9, "c2": 0.1, "c3": 0.8, "c4": 0.7, "c5": 0.6, "c6": 0.5,
+        "c7": None, "c8": None,
+    }
+    ents = spark.createDataFrame(
+        [("e1", "Acme", "", "company", [], "default"),
+         ("e2", "Bolt", "", "company", [], "default"),
+         ("e3", "Corp", "", "company", [], "default")],
+        "uuid string, name string, summary string, entity_type string, "
+        "aliases array<string>, group_id string",
+    )
+    edges = [
+        ("e1", "t1", "topic", "c1"),
+        ("e1", "e2", "entity", "c2"),
+        ("e2", "t1", "topic", "c3"),
+        ("e3", "t1", "topic", "c4"),
+        ("e3", "t1", "topic", "c5"),
+        ("e3", "t1", "topic", "c6"),
+        ("e1", "e2", "entity", "c7"),
+        ("e1", "e2", "entity", "c8"),
+    ]
+    rels = spark.createDataFrame(
+        [(f"r{i}", f, "entity", t, tt, "R", c, f"f{i}", "", "", "default")
+         for i, (f, t, tt, c) in enumerate(edges)],
+        "id string, from_uuid string, from_type string, to_uuid string, "
+        "to_type string, rel_type string, chunk_uuid string, fact_id string, "
+        "description string, date_context string, group_id string",
+    )
+    chunks = spark.createDataFrame(
+        [(c, f"text of {c}", "default") for c in scores],
+        "chunk_uuid string, content string, group_id string",
+    )
+    vectors = spark.createDataFrame(
+        [("chunk", c, vec(s), "default") for c, s in scores.items()],
+        "kind string, uuid string, embedding array<float>, group_id string",
+    )
+    ctx = build_context(
+        spark, ents, rels, chunks, vectors, "Acme", query,
+        caps={"high": 1, "low": 2, "topic": 3, "global": 1},
+    ).collect()
+    assert [(r["chunk_uuid"], r["source"], r["relevance"]) for r in ctx] == [
+        ("c1", "entity", "high"),
+        ("c3", "topic", "topic"),
+        ("c4", "topic", "topic"),
+        ("c2", "entity", "low"),
+        ("c7", "entity", "low"),
+    ]
+    assert [r["score"] for r in ctx] == [0.9, 0.8, 0.7, 0.1, None]
+
+
 def test_context_neighbor_chunks_bidirectional(spark):
     """A top-k neighbor contributes chunks from edges where it is EITHER
     endpoint (reference researcher.py:732-769 uses the full J2 OR-join per

@@ -305,3 +305,43 @@ def test_by_uuid_lookup_pushdown(spark, kg):
     p2 = _plan(facts_by_uuids(kg["facts"], fids).select("uuid"))
     assert "PushedFilters: [" in p2 and "In(uuid" in p2
     assert "Exchange" not in p2
+
+
+def test_driver_built_frames_are_local_relations(spark, kg):
+    """Frames the package builds from driver rows plan as LocalRelation
+    (a zero-job JVM scan), never as a pickled Python RDD."""
+    from vanna_financial_knowledge_graph_spark.operators.assemble import (
+        ontology_topics,
+    )
+    from vanna_financial_knowledge_graph_spark.operators.canonicalize import (
+        registry_surfaces_df,
+    )
+    from vanna_financial_knowledge_graph_spark.operators.context import (
+        build_context,
+    )
+    from vanna_financial_knowledge_graph_spark.operators.embed import (
+        search_entities,
+        search_topics,
+        two_stage_search,
+    )
+
+    frames = {
+        "build_context": build_context(
+            spark, kg["entities"], kg["relationships"], kg["chunks"],
+            kg["vectors"], "Apple Inc.", "earnings",
+        ),
+        "search_entities": search_entities(
+            spark, kg["vectors"], kg["entities"], "technology company", k=5
+        ),
+        "search_topics": search_topics(
+            spark, kg["vectors"], kg["topics"], "interest rates", k=5
+        ),
+        "two_stage_search": two_stage_search(
+            spark, kg["facts"], kg["vectors"], ["Apple Inc."], "earnings", k=5
+        ),
+        "registry_surfaces_df": registry_surfaces_df(spark),
+        "ontology_topics": ontology_topics(spark),
+    }
+    for name, df in frames.items():
+        p = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in p and "ExistingRDD" not in p, (name, p)

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..gazetteer import ontology_rows
+from ..session import local_frame
 
 GROUP_ID = "default"
 
@@ -40,7 +41,8 @@ def ontology_df(spark: SparkSession) -> DataFrame:
     from ..functions.textops import norm_name
 
     rows = [r[:-1] + (norm_name(r[-1]),) for r in rows]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "topic_uuid string, label string, definition string, uri string, "
         "parent_uuid string, parent_label string, surface_norm string",
@@ -61,7 +63,7 @@ def ontology_topics(spark: SparkSession) -> DataFrame:
         )
         for t in ontology_rows()
     ]
-    return spark.createDataFrame(rows, TOPICS)
+    return local_frame(spark, rows, TOPICS)
 
 
 def build_topics(

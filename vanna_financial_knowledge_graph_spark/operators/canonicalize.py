@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.textops import norm_name
 from ..gazetteer import registry_rows
+from ..session import local_frame
 
 GROUP_ID = "default"
 _SALT_BUCKETS = 16
@@ -69,7 +70,8 @@ def _registry_surfaces() -> dict[str, tuple[str, str, str, str]]:
 def registry_surfaces_df(spark: SparkSession) -> DataFrame:
     """_registry_surfaces() as a (name_norm, canonical_name, canonical_norm,
     entity_type, definition) DataFrame."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted((sn, *v) for sn, v in _registry_surfaces().items()),
         "name_norm string, canonical_name string, canonical_norm string, "
         "entity_type string, definition string",
@@ -171,8 +173,10 @@ def connected_components(
         node_list = [r["node"] for r in nodes.collect()]
         edge_list = [(r["src"], r["dst"]) for r in edges.collect()]
         comp = union_find_components_py(node_list, edge_list)
-        return nodes.sparkSession.createDataFrame(
-            [(n, comp[n]) for n in node_list], "node string, component string"
+        return local_frame(
+            nodes.sparkSession,
+            [(n, comp[n]) for n in node_list],
+            "node string, component string",
         )
 
     import os as _os
@@ -181,6 +185,17 @@ def connected_components(
     import time as _time
 
     spark = nodes.sparkSession
+    # the per-iteration scratch below must be readable by every executor:
+    # the tmpfs default is only coherent when driver and executors share a
+    # host, so off local mode fail before any work rather than mid-loop
+    scratch_env = _os.environ.get("VKG_CC_SCRATCH")
+    master = spark.sparkContext.master
+    if not (scratch_env or master == "local" or master.startswith("local[")):
+        raise RuntimeError(
+            f"connected_components: master {master!r} is not local mode; set "
+            "VKG_CC_SCRATCH to a directory on a filesystem every executor "
+            "shares (the per-iteration label scratch)"
+        )
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -196,7 +211,7 @@ def connected_components(
     # in BigInteger.multiply). A file scan resets stats to real sizes, so
     # growth stays linear; on a cluster the scratch dir is a shared
     # filesystem (VKG_CC_SCRATCH), locally tmpfs.
-    scratch_base = _os.environ.get("VKG_CC_SCRATCH") or (
+    scratch_base = scratch_env or (
         "/dev/shm" if _os.path.isdir("/dev/shm") else None
     )
     ckpt_dir = _tempfile.mkdtemp(prefix="vkg_cc_", dir=scratch_base)
@@ -358,7 +373,7 @@ def _canonical_map_driver(
     """Driver-side canonical map for small distinct-surface sets: identical
     logic to the distributed path (struct-max canonical pick, min-member
     components) computed in plain Python — one Spark aggregation job in,
-    one createDataFrame out. Equality with the distributed path is asserted
+    one local frame out. Equality with the distributed path is asserted
     by tests/test_canonicalize.py::test_canonical_paths_agree."""
     from ..functions.textops import stable_id, strip_corp_suffix
 
@@ -422,7 +437,8 @@ def _canonical_map_driver(
                 group_id,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "name_norm string, entity_uuid string, canonical_name string, "
         "entity_type string, component string, group_id string",

@@ -10,30 +10,38 @@ actually runs per question.
 Execution is STAGED and driver-assisted. Every intermediate that is
 dimension-sized by construction — the seed entity uuid, the top-k neighbor
 uuids, the seed's topic uuids, and the final <= high+low+topic capped
-selection — is collected to the driver and fed back as literal predicates.
-The candidate chunk set is NOT treated as dimension-sized (a hot entity's
-1-hop neighborhood is corpus-scale — ~212k of 216k chunks at sf1.0), so it
-never touches the driver: one map-side-partial groupBy dedups the source
-tags and joins a skinny cached (chunk_uuid, score) projection.
+selection — is collected to the driver and fed back as literal predicates
+or as an Arrow-built local relation (session.local_frame: a zero-job JVM
+scan, never a pickled Python RDD). The candidate chunk set is NOT treated
+as dimension-sized (a hot entity's 1-hop neighborhood is corpus-scale —
+~212k of 216k chunks at sf1.0), so it never touches the driver: one
+map-side-partial groupBy dedups the source tags and joins a skinny cached
+(chunk_uuid, score) projection, and ONE tier pass (tier_pick) ranks every
+candidate within its high/low/topic tier and collects only the capped
+rows; the driver then drops the topic rows whose chunk was admitted to
+high/low.
 Consequence at any scale: the edge table is scanned exactly TWICE (seed
 pass, neighbor+topic pass), both with pushable from/to-uuid IN-filters; the
 chunk-vector table exactly ONCE (the cached score projection, fully
 populated by the concurrent global top-k — a TakeOrderedAndProject over the
 codegen'd literal cosine); the content scan once, with the selected chunk
-ids pushed in as a literal IN-filter. No cache outlives the call, and the
-call never writes session configuration. This mirrors the reference's own
-sequential query plan (researcher.py fetches neighbors, then their chunks)
-— the collected values are a handful of uuids, never corpus-sized data.
+ids pushed in as a literal IN-filter. Only the seed edges and the score
+projection are cached, neither outlives the call, and the call never
+writes session configuration. This mirrors the reference's own sequential
+query plan (researcher.py fetches neighbors, then their chunks) — the
+collected values are a handful of uuids and <= high+low+topic rows, never
+corpus-sized data.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.embedding import EMBED_DIM, embed_text
+from ..session import local_frame
 from .dedup import cosine_literal_expr
 
 # reference ContextBuilder defaults (context_builder.py:36-41): high/low are
@@ -66,7 +74,7 @@ def build_context(
     chunks (their own dedup + caps['topic'], matching the reference's
     separate topic_chunks category). See the module docstring for how the
     selection executes."""
-    caps = caps or DEFAULT_CAPS
+    caps = caps or {}
     unknown = set(caps) - set(DEFAULT_CAPS)
     if unknown:
         raise ValueError(
@@ -74,21 +82,21 @@ def build_context(
             f"a subset of {sorted(DEFAULT_CAPS)} (per-source caps were "
             "replaced by reference relevance-TIER caps in round 3)"
         )
-    final = _staged_selection(
-        spark, entities, relationships, vectors, entity_name,
-        query_text, k_neighbors, caps, relevance_threshold, group_id,
+    rows = _staged_selection(
+        spark, entities, relationships, vectors, entity_name, query_text,
+        k_neighbors, {**DEFAULT_CAPS, **caps}, relevance_threshold, group_id,
     )
-    # the staged selection is already a local relation of <= 65 rows: push
-    # its chunk ids into the content scan as a literal IN-filter (round-6)
-    # — the vectorized parquet reader then reads the heavy content column
-    # only for matching rows (measured ~2x on the enrichment join; a no-op
+    # the selection is <= high+low+topic driver rows: push its chunk ids
+    # into the content scan as a literal IN-filter (round-6) — the
+    # vectorized parquet reader then reads the heavy content column only
+    # for matching rows (measured ~2x on the enrichment join; a no-op
     # logically, the inner join keeps exactly these ids anyway)
     chunks_side = chunks.where(F.col("group_id") == group_id)
-    sel_ids = [r["chunk_uuid"] for r in final.select("chunk_uuid").collect()]
+    sel_ids = [r["chunk_uuid"] for r in rows]
     if sel_ids:
         chunks_side = chunks_side.where(F.col("chunk_uuid").isin(sel_ids))
     return (
-        final.join(
+        local_frame(spark, rows, _RESULT_SCHEMA).join(
             chunks_side.select("chunk_uuid", "content"),
             "chunk_uuid",
         )
@@ -114,9 +122,10 @@ def _staged_selection(
     caps: dict[str, int],
     relevance_threshold: float,
     group_id: str,
-) -> DataFrame:
+) -> list:
     """Staged execution: dimension-sized driver collects, literal-predicate
-    scans; returns the tiny selection as a local frame."""
+    scans; returns the selected (chunk_uuid, source, relevance, score)
+    rows."""
     qv = embed_text(query_text, EMBED_DIM)
     euuids = [
         r["uuid"]
@@ -128,7 +137,7 @@ def _staged_selection(
         .collect()
     ]
     if not euuids:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return []
     r = relationships.where(F.col("group_id") == group_id)
 
     # edge-table scan 1 of 2: every edge touching the seed, from either
@@ -207,7 +216,7 @@ def _staged_selection(
     )
     global_topk = (
         scored.orderBy(F.desc("score"), "chunk_uuid")
-        .limit(caps.get("global", 10))
+        .limit(caps["global"])
         .select("chunk_uuid")
     )
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -238,8 +247,8 @@ def _staged_selection(
         "chunk_uuid", F.explode(tags).alias("source")
     )
 
-    src_global = spark.createDataFrame(
-        [(g, "global") for g in gids], "chunk_uuid string, source string"
+    src_global = local_frame(
+        spark, [(g, "global") for g in gids], "chunk_uuid string, source string"
     )
 
     # ONE aggregation replaces the old (distinct -> join -> groupBy-max)
@@ -266,50 +275,78 @@ def _staged_selection(
     )
     # the candidate set joins the cached skinny scores on chunk_uuid (two
     # skinny shuffles; no driver-side broadcast of a possibly corpus-scale
-    # id set, no embedding bytes through the exchange)
-    joined = (
-        per_chunk.join(scored, "chunk_uuid")
-        .select("chunk_uuid", "m", "has_topic", "score")
-        .cache()
-    )
-    main = joined.where(F.col("m").isNotNull()).select(
-        "chunk_uuid", F.col("m.source").alias("source"), "score"
-    )
-    high = (
-        main.where(F.col("score") >= relevance_threshold)
-        .withColumn("relevance", F.lit("high"))
-        .orderBy(F.desc("score"), "chunk_uuid")
-        .limit(caps.get("high", 30))
-    )
-    low = (
-        # NULL scores (zero-norm chunk embedding or zero query vector —
-        # cosine returns null, never DIVIDE_BY_ZERO) land in the LOW tier,
-        # exactly like relevance_split's `otherwise` branch; desc ordering
-        # puts them last within the tier
-        main.where(
-            (F.col("score") < relevance_threshold) | F.col("score").isNull()
-        )
-        .withColumn("relevance", F.lit("low"))
-        .orderBy(F.desc("score"), "chunk_uuid")
-        .limit(caps.get("low", 20))
-    )
-    capped = high.unionByName(low)
-    topic_capped = (
-        joined.where(F.col("has_topic") == 1)
-        .select("chunk_uuid", F.lit("topic").alias("source"), "score")
-        .orderBy(F.desc("score"), "chunk_uuid")
-        .limit(caps.get("topic", 15))
-        .withColumn("relevance", F.lit("topic"))
-    )
-    topic_only = topic_capped.join(
-        F.broadcast(capped.select("chunk_uuid")), "chunk_uuid", "left_anti"
-    )
-    final = capped.unionByName(topic_only)
-    # the selection is <= high+low+topic rows: land it driver-side in one
-    # collect, then release every cache — a long-lived session answers many
-    # questions and must not accumulate executor storage
-    rows = final.collect()
-    schema = final.schema
-    for c in (seed_edges, scored, joined):
+    # id set, no embedding bytes through the exchange), then one pass picks
+    # every tier in one collect
+    rows = tier_pick(
+        per_chunk.join(scored, "chunk_uuid"), caps, relevance_threshold
+    ).collect()
+    # the topic cap applied BEFORE this drop (the reference caps its
+    # topic_chunks on their own), so a topic row whose chunk was admitted
+    # to high/low leaves the topic tier short. Then release both caches —
+    # a long-lived session answers many questions and must not accumulate
+    # executor storage.
+    admitted = {r["chunk_uuid"] for r in rows if r["relevance"] != "topic"}
+    for c in (seed_edges, scored):
         c.unpersist()
-    return spark.createDataFrame(rows, schema)
+    return [
+        r for r in rows
+        if r["relevance"] != "topic" or r["chunk_uuid"] not in admitted
+    ]
+
+
+def tier_pick(
+    candidates: DataFrame, caps: dict[str, int], relevance_threshold: float
+) -> DataFrame:
+    """(chunk_uuid, m, has_topic, score) candidates -> the capped (chunk_uuid,
+    source, relevance, score) rows of every tier, in one pass.
+
+    A candidate explodes into its relevance tier when it has a non-topic
+    source `m` (NULL scores — zero-norm chunk embedding or zero query
+    vector; cosine returns null, never DIVIDE_BY_ZERO — land in LOW, like
+    relevance_split's `otherwise` branch) and into the topic tier when
+    `has_topic` is set. Each tier keeps its best `cap` rows by (score desc,
+    NULLs last; chunk_uuid); the constant max-cap bound lets the planner
+    prune every tier to that many rows per partition before the tier
+    exchange. Topic rows of chunks also admitted to high/low are NOT
+    dropped here: the caller drops them after the cap."""
+    tier = F.explode(
+        F.array_compact(
+            F.array(
+                F.when(
+                    F.col("m").isNotNull(),
+                    F.when(
+                        F.col("score") >= relevance_threshold, F.lit("high")
+                    ).otherwise(F.lit("low")),
+                ),
+                F.when(F.col("has_topic") == 1, F.lit("topic")),
+            )
+        )
+    )
+    rel = F.col("relevance")
+    cap = (
+        F.when(rel == "high", caps["high"])
+        .when(rel == "low", caps["low"])
+        .otherwise(caps["topic"])
+    )
+    rank = F.row_number().over(
+        Window.partitionBy("relevance").orderBy(F.desc("score"), "chunk_uuid")
+    )
+    return (
+        candidates.select(
+            "chunk_uuid", "score", F.col("m.source").alias("src"),
+            tier.alias("relevance"),
+        )
+        .withColumn("rk", rank)
+        .where(
+            (F.col("rk") <= max(caps["high"], caps["low"], caps["topic"]))
+            & (F.col("rk") <= cap)
+        )
+        .select(
+            "chunk_uuid",
+            F.when(rel == "topic", F.lit("topic"))
+            .otherwise(F.col("src"))
+            .alias("source"),
+            "relevance",
+            "score",
+        )
+    )

@@ -106,6 +106,24 @@ def minhash_signatures(
     return mins.select("doc_id", sig.alias("signature"))
 
 
+def _bucket_members(
+    banded: DataFrame, keys: list[str], member: str, max_bucket: int
+) -> DataFrame:
+    """(keys..., ms) for every bucket of 2..max_bucket members, ms the
+    collected `member` list. The size is COUNTED first (a window count over
+    the bucket's partition, which spills) and filtered below the
+    collect_list, so a hot bucket's member array is never built — one
+    boilerplate band value can hold millions of docs. The collect reuses
+    the window's bucket partitioning: still one exchange."""
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return (
+        banded.withColumn("n", n)
+        .where((F.col("n") >= 2) & (F.col("n") <= max_bucket))
+        .groupBy(*keys)
+        .agg(F.collect_list(member).alias("ms"))
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 8,
@@ -121,9 +139,9 @@ def lsh_candidate_pairs(
     bucket's member list and in-bucket combinations are generated by a
     nested posexplode/slice — the old self-join shape evaluated the whole
     signature subtree TWICE (once per join side, nothing materialized
-    between) and paid a window sort just to count bucket sizes; now the
-    upstream runs once, the size guard is a size() filter on the collected
-    list, and no join or window remains (guide §2.4)."""
+    between); now the upstream runs once, through one exchange, and no
+    join remains (guide §2.4). The size guard counts before it collects
+    (_bucket_members)."""
     banded = signatures.select(
         "doc_id",
         F.posexplode(
@@ -147,11 +165,7 @@ def lsh_candidate_pairs(
             )
         ).alias("band", "band_hash"),
     )
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.collect_list("doc_id").alias("ms"))
-        .where((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
-    )
+    buckets = _bucket_members(banded, ["band", "band_hash"], "doc_id", max_bucket)
     return (
         buckets.select(F.posexplode("ms").alias("i", "x"), "ms")
         .select(
@@ -173,15 +187,19 @@ def jaccard_verify(
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs (array set ops, JVM-side).
 
-    The PAIR side broadcasts (round-6): candidates are band-bucket-capped
-    upstream (max_bucket), so the pair set is orders of magnitude smaller
-    than the shingle table — without the hint the planner shuffled the
-    heavy shingle arrays through both joins to meet a handful of id pairs."""
+    Only the skinny PAIR side broadcasts (round-6): candidates are
+    band-bucket-capped upstream (max_bucket), so the pair set is orders of
+    magnitude smaller than the shingle table, and the a-side shingles stream
+    past it. Nothing that carries a shingle array is ever broadcast — a
+    dup-heavy corpus multiplies the pairs, and each row would carry a whole
+    array — so the b-side is a sort-merge join: it shuffles and spills
+    instead of landing on the driver."""
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     return (
-        F.broadcast(F.broadcast(pairs).join(a, "doc_a"))
-        .join(b, "doc_b")
+        F.broadcast(pairs)
+        .join(a, "doc_a")
+        .join(b.hint("merge"), "doc_b")
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("sh_a", "sh_b"))
@@ -414,21 +432,17 @@ def simhash_near_dups(
     single-prefix probe missed every pair differing in a top-16 bit.
     Buckets over max_bucket docs are dropped (boilerplate guard)."""
     # Round-6 physical rewrite, same pairs (cf. lsh_candidate_pairs): the
-    # old bucket self-join evaluated the SimHash UDF subtree twice and paid
-    # a window sort for the bucket-size guard; one groupBy collects each
-    # bucket's (doc_id, simhash) members, the guard is a size() filter, and
-    # combinations explode in place — hamming is symmetric, so ordering the
-    # pair by least/greatest doc_id preserves the old (doc_a < doc_b) rows.
+    # old bucket self-join evaluated the SimHash UDF subtree twice; one
+    # groupBy collects each size-guarded bucket's (doc_id, simhash)
+    # members (_bucket_members), and combinations explode in place —
+    # hamming is symmetric, so ordering the pair by least/greatest doc_id
+    # preserves the old (doc_a < doc_b) rows.
     fp = simhash_fingerprints(documents, text_col, bands)
     banded = fp.select(
         F.struct("doc_id", "simhash").alias("m"),
         F.posexplode("bands").alias("band", "band_val"),
     )
-    buckets = (
-        banded.groupBy("band", "band_val")
-        .agg(F.collect_list("m").alias("ms"))
-        .where((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
-    )
+    buckets = _bucket_members(banded, ["band", "band_val"], "m", max_bucket)
     pairs = buckets.select(F.posexplode("ms").alias("i", "x"), "ms").select(
         "x",
         F.explode(F.slice(F.col("ms"), F.col("i") + 2, F.size("ms"))).alias("y"),

@@ -21,6 +21,7 @@ import pandas as pd  # module-level: pandas_udf resolves string type hints
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import cosine_expr
 
 
@@ -394,7 +395,7 @@ def ivf_pq_topk(
     spark = embeddings.sparkSession
     qid_type = queries.schema["query_id"].dataType.simpleString()
     vid_type = embeddings.schema["vec_id"].dataType.simpleString()
-    probes = spark.createDataFrame(probe_rows, f"query_id {qid_type}, cell int")
+    probes = local_frame(spark, probe_rows, f"query_id {qid_type}, cell int")
 
     def _adc(batches):
         for pdf in batches:
